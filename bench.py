@@ -19,6 +19,11 @@ import time
 
 _REPO = pathlib.Path(__file__).resolve().parent
 sys.path.insert(0, str(_REPO))
+# Spark's Python workers import the package too (UDFs, mapInPandas): put
+# the repo on their path as well, so a launch from any directory works
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (str(_REPO), os.environ.get("PYTHONPATH", "")) if p
+)
 
 from nqs_console_flink_window_spark.plans import all as _all  # noqa: E402,F401
 from nqs_console_flink_window_spark.plans.registry import REGISTRY  # noqa: E402

@@ -38,9 +38,6 @@ SURVEY §7.4) and treats a NULL metric as contributing 0.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from .pq_criteria import CRITERIA, Band, Metric
 
 
@@ -128,10 +125,6 @@ def record_score_sql(protocol: str, colmap: dict[str, str] | None = None) -> str
     return f"(CASE WHEN {any_outlier} THEN 0.0 ELSE {fround(clamped, 2)} END)"
 
 
-def record_score_col(protocol: str, colmap: dict[str, str] | None = None) -> Column:
-    return F.expr(record_score_sql(protocol, colmap))
-
-
 def dispatch_score_sql(
     protocol_expr: str,
     colmaps: dict[str, dict[str, str]],
@@ -144,10 +137,6 @@ def dispatch_score_sql(
         for p, cm in colmaps.items()
     ]
     return "(CASE " + " ".join(whens) + " ELSE 0.0 END)"
-
-
-def dispatch_score_col(protocol_expr: str, colmaps: dict[str, dict[str, str]]) -> Column:
-    return F.expr(dispatch_score_sql(protocol_expr, colmaps))
 
 
 # --------------------------------------------------------------------------
@@ -303,12 +292,6 @@ def dispatch_score_rank_sql(
         for p, cm in colmaps.items()
     ]
     return "(CASE " + " ".join(whens) + " ELSE 0.0 END)"
-
-
-def dispatch_score_rank_col(
-    protocol_expr: str, colmaps: dict[str, dict[str, str]]
-) -> Column:
-    return F.expr(dispatch_score_rank_sql(protocol_expr, colmaps))
 
 
 def dispatch_score_rank_staged(

@@ -22,22 +22,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .image_index import (
+    BANDS,
     _bband_col,
     build_image_index,
     image_index_append,
     image_index_ingest_batch,
     incremental_image_dedup,
     incremental_image_dedup_sql,
+    read_image_index,
 )
 from .multimodal import audio_fp_grid_sql, extract_audio_fp
 
-# layout-only verbs: reused verbatim (they never look at band semantics)
-from .image_index import compact_image_index as compact_audio_index  # noqa: E402,F401
-from .image_index import (  # noqa: E402,F401
-    compact_streamed_image_index as compact_streamed_audio_index,
-)
-from .image_index import image_index_delete as audio_index_delete  # noqa: E402,F401
-from .image_index import read_image_index as read_audio_index  # noqa: E402,F401
+# layout-only verbs: the band index table's lifecycle, verbatim (they
+# never look at band semantics)
+compact_audio_index = BANDS.compact
+compact_streamed_audio_index = BANDS.compact_streamed
+audio_index_delete = BANDS.delete
+read_audio_index = read_image_index
 
 
 def audio_bands(media: DataFrame) -> DataFrame:
@@ -134,15 +135,6 @@ def build_audio_spectral_index(spark, media: DataFrame, path: str) -> None:
     build_image_index(spark, media, path, bands_fn=audio_spectral_bands)
 
 
-def audio_spectral_index_ingest_batch(
-    spark, batch_media: DataFrame, batch_id: int, path: str
-) -> None:
-    """Replay-idempotent streamed landing — the image verb reused."""
-    image_index_ingest_batch(
-        spark, batch_media, batch_id, path, bands_fn=audio_spectral_bands
-    )
-
-
 def incremental_audio_spectral_dedup(
     spark, media: DataFrame, index_bands: DataFrame | None
 ) -> tuple[DataFrame, DataFrame]:
@@ -211,15 +203,6 @@ def audio_windowed_bands(media: DataFrame) -> DataFrame:
 def build_audio_windowed_index(spark, media: DataFrame, path: str) -> None:
     """Bulk build — the image verb with the windowed extractor."""
     build_image_index(spark, media, path, bands_fn=audio_windowed_bands)
-
-
-def audio_windowed_index_ingest_batch(
-    spark, batch_media: DataFrame, batch_id: int, path: str
-) -> None:
-    """Replay-idempotent streamed landing — the image verb reused."""
-    image_index_ingest_batch(
-        spark, batch_media, batch_id, path, bands_fn=audio_windowed_bands
-    )
 
 
 def incremental_audio_shifted_dedup(

@@ -12,15 +12,12 @@ different extractor) and the video index (video_index.py — frame axis
 folded into the band key) ride ``bands_fn``/``grid_sql_fn`` hooks on
 the verbs and gate below rather than copying them.
 
-- ``image_index_ingest_batch`` — replay-idempotent streamed landings
-  under ``bband=<b>/batch_id=<n>`` with dynamic partition overwrite
-  (the ``text_index_ingest_batch`` / ``ivf_index_ingest_batch``
-  treatment);
-- ``compact_image_index`` / ``compact_streamed_image_index`` — the ONE
-  crash-safe fold core (``sinks.writers.fold_parquet_files`` /
-  ``compact_batch_landings``);
-- ``image_index_delete`` — ``delete_rows_partitioned``'s staged-commit
-  manifest protocol (and with it the round-10 bulk semi-join switch).
+The lifecycle itself (flat/streamed layouts and their mutual refusal,
+replay-idempotent ``bband=<b>/batch_id=<n>`` landings, both compaction
+walks, the staged-commit delete, the emptiness-tolerant read and the
+cross-batch doc_id freshness probe) is ``sinks.index_table`` keyed by
+``bband`` (``BANDS``); this module adds the band extractor, the
+per-(doc_id, band) multiplicity contract and the near-dup gate.
 
 Scale design (100 TB): an ingest batch decodes ONLY its own images (one
 Arrow ``mapInPandas`` pass), its DHASH_BANDS x |batch| band rows
@@ -47,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import dialect as X
+from ..sinks import index_table as IT
 from .multimodal import (
     DHASH_BANDS,
     DHASH_MAX_HAMMING,
@@ -56,7 +54,9 @@ from .multimodal import (
 IMAGE_BANDS_BUCKETS = 64
 # columns every probe/maintenance path consumes; bband is re-derivable
 # from (band, bv) but stored so the scan's partition encoding IS the key
-_BANDS_SCHEMA = "doc_id bigint, band int, bv bigint, bband int"
+BANDS = IT.IndexTable(
+    "bband", "doc_id", "doc_id bigint, band int, bv bigint, bband int"
+)
 
 
 def _bband_col():
@@ -86,55 +86,18 @@ def image_bands(media: DataFrame) -> DataFrame:
     )
 
 
-def _image_index_layout(path: str) -> str | None:
-    """"flat" (build/append — files directly under ``bband=N/``),
-    "batched" (streamed ingest — ``bband=N/batch_id=M``), or None (no
-    data).  Mixed depths are unreadable by Spark, so the maintenance
-    paths refuse each other's layouts (the ``_ivf_layout`` contract)."""
-    from pathlib import Path
-
-    kinds = set()
-    for sub in Path(path).glob("bband=*"):
-        if any(sub.glob("batch_id=*")):
-            kinds.add("batched")
-        if any(sub.glob("*.parquet")):
-            kinds.add("flat")
-    if len(kinds) > 1:
-        raise ValueError(
-            f"image index at {path} mixes flat and batched layouts — "
-            "unreadable by Spark; rebuild it (build_image_index) or remove "
-            "the foreign-layout files"
-        )
-    return kinds.pop() if kinds else None
-
-
-def read_image_index(spark, path: str) -> DataFrame:
-    """Emptiness-tolerant index read (the ``_read_index_or_empty``
-    discipline: a delete-all leaves no partition dirs to infer a schema
-    from, and an emptied index must stay probe-able, not raise)."""
-    from .similarity import _read_index_or_empty
-
-    return _read_index_or_empty(spark, path, _BANDS_SCHEMA)
-
-
-def _assert_fresh_image_ids(
+def _assert_fresh_bands(
     spark, bands: DataFrame, path: str, where: str,
     exclude_batch_id: int | None = None,
 ) -> None:
-    """The index's doc_id-uniqueness contract (``_assert_fresh_doc_ids``
-    applied to the band table): a re-ingested image would land duplicate
-    band rows — every future probe would double-count its collisions and
-    near-dup verdicts would silently drift.  Intra-batch: more than
-    DHASH_BANDS rows per doc_id means the batch repeats an image.
-    Cross-batch: IN-list probe for bounded batches, semi-join above the
-    threshold; ``exclude_batch_id`` exempts a replay's own landings."""
-    from .retrieval import _FRESH_PROBE_INLIST
-
-    # per-(doc_id, band) multiplicity — equivalent to the old
-    # rows-per-doc > DHASH_BANDS rule for images (4 distinct bands each,
-    # a repeat doubles every one) and ALSO exact for the video family,
-    # whose frame-augmented band tables legitimately carry a variable
-    # number of rows per doc (content frames only)
+    """The band table's batch contract.  Intra-batch (this family's own
+    check): a repeated image would land duplicate band rows — every future
+    probe would double-count its collisions and near-dup verdicts would
+    silently drift.  Per-(doc_id, band) multiplicity is exact for images
+    (4 distinct bands each, a repeat doubles every one) AND for the video
+    family, whose frame-augmented band tables legitimately carry a
+    variable number of rows per doc (content frames only).  Cross-batch:
+    the index table's freshness probe."""
     dup = (
         bands.groupBy("doc_id", "band")
         .count()
@@ -147,38 +110,10 @@ def _assert_fresh_image_ids(
             "double-count collisions in every probe; dedup the batch "
             "before indexing"
         )
-    existing = read_image_index(spark, path)
-    if exclude_batch_id is not None and "batch_id" in existing.columns:
-        existing = existing.filter(F.col("batch_id") != int(exclude_batch_id))
     ids = bands.select("doc_id").distinct()
-    head = ids.limit(_FRESH_PROBE_INLIST + 1).collect()
-    if len(head) <= _FRESH_PROBE_INLIST:
-        if not head:
-            return  # empty batch — nothing to clash
-        # one SQL string, not Column.isin(list) — isin builds one py4j
-        # literal per id (~2 s at 2500 ids for the identical In plan);
-        # doc_id is BIGINT by contract, enforced loudly (a NULL id can
-        # never be probed and would raise an opaque TypeError below)
-        if any(
-            r["doc_id"] is None or not isinstance(r["doc_id"], int)
-            for r in head
-        ):
-            raise ValueError(
-                f"{where}: batch carries a NULL or non-integer doc_id — "
-                "doc_id is the index's BIGINT key by contract"
-            )
-        clash = existing.filter(
-            f"doc_id IN ({', '.join(str(int(r['doc_id'])) for r in head)})"
-        ).limit(1)
-    else:
-        clash = ids.join(
-            existing.select("doc_id"), "doc_id", "left_semi"
-        ).limit(1)
-    if clash.count() > 0:
-        raise ValueError(
-            f"{where}: batch re-ingests an already-indexed doc_id — "
-            "anti-join the batch against the index before ingesting"
-        )
+    BANDS.assert_fresh(
+        spark, path, ids, IT.probe_head(ids, "doc_id"), where, exclude_batch_id
+    )
 
 
 def build_image_index(
@@ -189,18 +124,8 @@ def build_image_index(
     prune at the file listing (the build_text_index argument applied to
     the perceptual hash).  ``bands_fn`` swaps the band extractor (the
     video family rides these verbs with its frame-augmented band space —
-    video_index.py).
-
-    The pre-write ``repartition("bband")`` aligns shuffle output with the
-    partition columns so each bucket directory gets ONE file instead of
-    one per upstream task (measured: 1534 tiny files -> 48 on the sf0.1
-    video index, ~1 s of per-read listing/footer overhead gone).  At
-    100 TB a single file per bucket would be oversized — there the knob
-    is adding ``bv`` (or a salt) to the repartition key, which spreads a
-    bucket over many tasks while keeping every file bucket-pure."""
-    (bands_fn or image_bands)(media).repartition("bband").write.mode(
-        "overwrite"
-    ).partitionBy("bband").parquet(path)
+    video_index.py)."""
+    BANDS.build((bands_fn or image_bands)(media), path)
 
 
 def image_index_append(
@@ -208,36 +133,11 @@ def image_index_append(
 ) -> None:
     """Incremental maintenance of the FLAT layout: hash NEW images and
     append their bands into the bband partitions (small-file debt settled
-    by ``compact_image_index``).  Refuses the streamed layout — mixing
-    partition depths breaks every reader."""
-    if _image_index_layout(path) == "batched":
-        raise ValueError(
-            "image_index_append into a STREAMED (bband/batch_id) index "
-            "would mix partition depths — route new images through "
-            "image_index_ingest_batch instead"
-        )
+    by ``compact_image_index``).  Refuses the streamed layout."""
+    BANDS.check_layout(path, "flat")
     bands = (bands_fn or image_bands)(media)
-    _assert_fresh_image_ids(spark, bands, path, "image_index_append")
-    bands.repartition("bband").write.mode("append").partitionBy(
-        "bband"
-    ).parquet(path)
-
-
-def _ingest_bands(
-    bspark, bands: DataFrame, batch_id: int, path: str
-) -> None:
-    """Land ALREADY-COMPUTED band rows under ``bband=<b>/batch_id=<n>``
-    with dynamic partition overwrite — the shared tail of
-    ``image_index_ingest_batch`` and the incremental-dedup flow (which
-    has the batch's bands in hand and must not re-decode)."""
-    (
-        bands.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        .repartition("bband")  # one file per (bband, batch) slice
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bband", "batch_id")
-        .parquet(path)
-    )
+    _assert_fresh_bands(spark, bands, path, "image_index_append")
+    BANDS.append(bands, path)
 
 
 def image_index_ingest_batch(
@@ -246,74 +146,26 @@ def image_index_ingest_batch(
     """One micro-batch's landing — the REPLAY-IDEMPOTENT streaming form:
     an at-least-once replay overwrites exactly its own (bband, batch)
     slices instead of double-appending.  Refuses the flat layout."""
-    if _image_index_layout(path) == "flat":
-        raise ValueError(
-            "image_index_ingest_batch into a FLAT (build/append) index "
-            "would mix partition depths — keep maintaining it via "
-            "image_index_append, or rebuild as a streamed index"
-        )
+    BANDS.check_layout(path, "batched")
     bands = (bands_fn or image_bands)(batch_media).localCheckpoint()
-    _assert_fresh_image_ids(
+    _assert_fresh_bands(
         bspark, bands, path, "image_index_ingest_batch",
         exclude_batch_id=batch_id,
     )
-    _ingest_bands(bspark, bands, batch_id, path)
+    BANDS.ingest(bands, batch_id, path)
 
 
-def compact_image_index(
-    spark, path: str, target_bytes: int = 128 * 1024 * 1024
-) -> dict[str, int]:
-    """Fold each bband partition's files via the ONE shared crash-safe
-    fold core (flat layout — the ``compact_ivf_index`` treatment).  Pure
-    layout change; the partition encoding and probe pruning hold."""
-    from pathlib import Path
-
-    from ..sinks.writers import fold_parquet_files
-
-    out: dict[str, int] = {}
-    for sub in sorted(Path(path).glob("bband=*")):
-        try:
-            int(sub.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        inputs = sorted(str(p) for p in sub.glob("*.parquet"))
-        out[sub.name] = fold_parquet_files(spark, inputs, sub, target_bytes)
-    return out
+# layout-only verbs: the index table's lifecycle, verbatim (they never
+# look at band semantics — audio_index/video_index re-export them)
+compact_image_index = BANDS.compact
+compact_streamed_image_index = BANDS.compact_streamed
+image_index_delete = BANDS.delete
 
 
-def compact_streamed_image_index(
-    spark, path: str, upto_batch_id: int
-) -> dict[str, int]:
-    """Streamed-layout maintenance: fold each bband's ``batch_id=<n>``
-    landings below the committed watermark into the reserved -1
-    generation — ``compact_batch_landings`` per bucket, inheriting the
-    watermark-coupling contract and replay-ownership rule verbatim."""
-    from pathlib import Path
-
-    from ..sinks.writers import compact_batch_landings
-
-    out: dict[str, int] = {}
-    for sub in sorted(Path(path).glob("bband=*")):
-        try:
-            int(sub.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        out[sub.name] = compact_batch_landings(spark, str(sub), upto_batch_id)
-    return out
-
-
-def image_index_delete(spark, path: str, doc_ids) -> None:
-    """Compliance deletion: remove every band row of ``doc_ids`` by
-    targeted partition rewrite under the staged-commit manifest (and the
-    round-10 bulk semi-join switch above the IN-list threshold).
-    Idempotent and crash-convergent like the core it rides."""
-    from ..sinks.writers import delete_rows_partitioned
-
-    layout = _image_index_layout(path)
-    if layout is None:
-        return
-    pcols = ["bband"] if layout == "flat" else ["bband", "batch_id"]
-    delete_rows_partitioned(spark, path, "doc_id", doc_ids, pcols)
+def read_image_index(spark, path: str) -> DataFrame:
+    """The band table, emptiness-tolerant (an emptied index stays
+    probe-able)."""
+    return BANDS.read(spark, path)
 
 
 def incremental_image_dedup(
@@ -329,8 +181,8 @@ def incremental_image_dedup(
     any-band-collision rule upgraded to verified Hamming — a shared
     16-bit band alone admits pairs up to Hamming 48).
 
-    Returns ``(kept_ids, kept_bands)``: ingest ``kept_bands`` (via
-    ``_ingest_bands`` / append) to admit the batch into the index."""
+    Returns ``(kept_ids, kept_bands)``: land ``kept_bands`` (``BANDS.ingest``
+    / ``BANDS.append``) to admit the batch into the index."""
     from .staging import staged_views
 
     nb = (bands_fn or image_bands)(media).localCheckpoint()

@@ -77,6 +77,7 @@ from collections.abc import Callable
 from contextlib import contextmanager
 
 from ..functions import dialect as X
+from ..sinks import index_table as IT
 from .selection import qln_micro
 
 # LM fit slice: the "clean reference corpus" is the deterministic 1-in-7
@@ -1293,11 +1294,7 @@ def hybrid_dense_sparse_ann_indexed(
 
     from pyspark.sql import functions as F
 
-    from .similarity import (
-        _read_centroids,
-        _read_index_or_empty,
-        ivf_multi_indexed,
-    )
+    from .similarity import IVF, _read_centroids, ivf_multi_indexed
     from .staging import staged_views
 
     # the exact dense legs exclude each query's own vector from the
@@ -1311,9 +1308,7 @@ def hybrid_dense_sparse_ann_indexed(
 
     def _clash_count() -> int:
         return (
-            _read_index_or_empty(
-                spark, ivf_path, "vec_id bigint, embedding array<float>, cell int"
-            )
+            IVF.read(spark, ivf_path)
             .filter(F.col("vec_id").isin(qids))
             .limit(1)
             .count()
@@ -1578,6 +1573,14 @@ def lm_model_score(docs_df, model: tuple[list[tuple[str, int]], int]):
 TEXT_INDEX_BUCKETS = 64  # token-hash partition count (raw-token partitionBy
 # would mint |vocab| directories; hash buckets keep the layout bounded)
 
+# postings partitioned by token bucket, plus the doc-length sidecar at
+# ``<path>.doclen`` (flat, or batch_id-partitioned when streamed) — both
+# ride the one index-table lifecycle
+POSTINGS = IT.IndexTable(
+    "tbucket", "doc_id", "doc_id bigint, token string, tf bigint, tbucket int"
+)
+DOCLEN = IT.IndexTable(None, "doc_id", "doc_id bigint, dl bigint")
+
 
 def _token_bucket(token: str) -> int:
     """Python twin of the engine's bucket rule (md5_int % buckets) — the
@@ -1598,40 +1601,15 @@ def _assert_no_null_text(docs_df, where: str) -> None:
     takes against the doclen row count it just wrote (one footer-metadata
     read, no second corpus scan)."""
     if docs_df.filter("text IS NULL").limit(1).count() > 0:
-        raise ValueError(
-            f"{where}: NULL-text docs are outside the text-index contract "
-            "(they produce no tokens and no doclen row, so the append-time "
-            "stats rebuild would drift N) — filter them out before indexing"
-        )
+        raise _null_text_error(where)
 
 
-_FRESH_PROBE_INLIST = 10_000  # max ids inlined as a pushed-down IN filter
-
-
-def _text_index_layout(path: str) -> str | None:
-    """Which physical layout the index at ``path`` carries: ``"flat"``
-    (build_text_index / text_index_append — data files directly under
-    ``tbucket=N/``), ``"batched"`` (streamed ingest —
-    ``tbucket=N/batch_id=M``), or ``None`` (no postings yet).  Spark
-    cannot read a directory mixing both partition depths
-    (CONFLICTING_PARTITION_COLUMN_NAMES), so the flat-append and streamed
-    maintenance paths must refuse each other's layouts."""
-    from pathlib import Path
-
-    kinds = set()
-    for sub in Path(path).glob("tbucket=*"):
-        if any(sub.glob("batch_id=*")):
-            kinds.add("batched")
-        if any(sub.glob("*.parquet")):
-            kinds.add("flat")
-    if len(kinds) > 1:
-        raise ValueError(
-            f"text index at {path} mixes flat and batched bucket layouts — "
-            "unreadable by Spark; rebuild it (build_text_index) or remove "
-            "the foreign-layout files"
-        )
-    return kinds.pop() if kinds else None
-
+def _null_text_error(where: str) -> ValueError:
+    return ValueError(
+        f"{where}: NULL-text docs are outside the text-index contract "
+        "(they produce no tokens and no doclen row, so the append-time "
+        "stats rebuild would drift N) — filter them out before indexing"
+    )
 
 
 def _rebuild_stats(spark, path: str) -> None:
@@ -1644,36 +1622,17 @@ def _rebuild_stats(spark, path: str) -> None:
     delete of every doc removes all batch_id=* partition dirs outright —
     the doclen dir then holds no parquet files at all and spark.read
     cannot infer a schema, so an empty dir writes the 0/0 stats row
-    directly — via the shared ``_read_index_or_empty`` probe, whose
+    directly — via the index table's emptiness-tolerant read, whose
     empty frame aggregates to exactly that row (COUNT 0, COALESCE 0), so
     both layouts take one code path."""
     from pyspark.sql import functions as F
 
-    from .similarity import _read_index_or_empty
-
-    dl = _read_index_or_empty(spark, f"{path}.doclen", "doc_id bigint, dl bigint")
+    dl = DOCLEN.read(spark, f"{path}.doclen")
     stats = dl.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("t_tok"),
     )
     stats.coalesce(1).write.mode("overwrite").parquet(f"{path}.stats")
-
-
-def _landed_doclen_batches(path: str) -> set[int] | None:
-    """The batch_id set of the STREAMED doclen sidecar's landed slices —
-    a directory listing, never a data scan.  None when any slice dir is
-    not batch_id-shaped (foreign layout: fall back to the full rebuild)."""
-    from pathlib import Path
-
-    ids: set[int] = set()
-    for d in Path(f"{path}.doclen").glob("batch_id=*"):
-        if not any(d.glob("*.parquet")):
-            continue
-        try:
-            ids.add(int(d.name.split("=", 1)[1]))
-        except ValueError:
-            return None
-    return ids
 
 
 def _slices_sig(ids: set[int]) -> str:
@@ -1718,9 +1677,7 @@ def _ingest_stats_update(
 
     from pyspark.sql import functions as F
 
-    from .similarity import _read_index_or_empty
-
-    ids = _landed_doclen_batches(path)
+    ids = DOCLEN.landed_batches(f"{path}.doclen")
     fast = None
     if ids is not None and int(batch_id) in ids:
         prior_sig = _slices_sig(ids - {int(batch_id)})
@@ -1746,10 +1703,7 @@ def _ingest_stats_update(
     if fast is not None:
         n_docs, t_tok = fast
     else:
-        dl = _read_index_or_empty(
-            bspark, f"{path}.doclen", "doc_id bigint, dl bigint"
-        )
-        srow = dl.agg(
+        srow = DOCLEN.read(bspark, f"{path}.doclen").agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("t"),
         ).collect()[0]
@@ -1771,67 +1725,36 @@ def _assert_fresh_doc_ids(
     path: str,
     where: str,
     exclude_batch_id: int | None = None,
-    check_null_text: bool = False,
 ) -> int | None:
-    """Enforce the index's doc_id-uniqueness contract on an APPEND/INGEST
-    batch: a re-ingested doc_id would land a SECOND doclen row and a
-    second postings row per term, silently inflating N/T and
+    """Enforce the text index's batch contract on an APPEND/INGEST batch:
+    no NULL text (``_assert_no_null_text``), no doc_id repeated inside the
+    batch, and no doc_id already in the doclen sidecar (the index table's
+    freshness probe).  A re-ingested doc_id would land a SECOND doclen
+    row and a second postings row per term, silently inflating N/T and
     double-counting tf in every score — the same silent-N-drift class the
-    NULL-text assert closes.  Two probes, both batch-scale cheap (appends
-    are micro-batches):
-
-    - intra-batch: the batch itself must not repeat a doc_id;
-    - cross-batch: probe the batch's doc_ids against the existing doclen
-      sidecar.  For bounded batches (<= ``_FRESH_PROBE_INLIST`` distinct
-      ids) the ids collect into an IN-list predicate — a pushed-down
-      literal filter the parquet scan prunes with row-group min/max
-      stats, so the probe cost tracks the BATCH, not the index (a
-      semi-join would scan the whole index-scale sidecar every
-      micro-batch).  Oversized batches fall back to the semi-join.
-      ``exclude_batch_id`` exempts rows the caller is about to OVERWRITE
-      (the replay-idempotent ingest path re-lands its own (bucket, batch)
-      slices — those rows are replaced, not duplicated, so a replay must
-      pass).
+    NULL-text assert closes.
 
     Returns the batch row count when bounded, else None — a streaming
     caller uses 0 to skip an empty landing without scheduling its own
-    emptiness-probe job.  With ``check_null_text=True`` the SAME collected
-    head also enforces the NULL-text contract for bounded batches
-    (oversized batches run the distributed ``_assert_no_null_text``
-    probe), so the per-micro-batch contract costs ONE driver collect
-    instead of three jobs."""
+    emptiness-probe job.  For bounded batches ONE driver collect serves
+    every probe: the ids come to the driver anyway for the IN-list
+    freshness filter, so the intra-batch duplicate check is a Python set
+    test and the NULL-text check a flag scan (saves the distributed
+    groupBy+count and IsNull jobs — measured ~0.3-0.4 s each of the
+    per-micro-batch assert cost); oversized batches keep the distributed
+    probes."""
     from pyspark.sql import functions as F
 
+    head = IT.probe_head(new_docs, "doc_id", F.isnull("text").alias("_tnull"))
     ids = new_docs.select("doc_id")
-    # one collect serves EVERY probe for bounded batches: the ids come to
-    # the driver anyway for the IN-list freshness filter, so the
-    # intra-batch duplicate check is a Python set test and the NULL-text
-    # check a flag scan (saves the distributed groupBy+count and IsNull
-    # jobs — measured ~0.3-0.4 s each of the per-micro-batch assert
-    # cost); oversized batches keep the distributed probes
-    cols = ["doc_id"] + (
-        [F.isnull("text").alias("_tnull")] if check_null_text else []
-    )
-    head = new_docs.select(*cols).limit(_FRESH_PROBE_INLIST + 1).collect()
-    head_ids = [r["doc_id"] for r in head]
-    bounded = len(head) <= _FRESH_PROBE_INLIST
-    if check_null_text:
-        # same raise order as the standalone probe: NULL-text before dup
-        if bounded:
-            if any(r["_tnull"] for r in head):
-                raise ValueError(
-                    f"{where}: NULL-text docs are outside the text-index "
-                    "contract (they produce no tokens and no doclen row, "
-                    "so the append-time stats rebuild would drift N) — "
-                    "filter them out before indexing"
-                )
-        else:
-            _assert_no_null_text(new_docs, where)
-    if bounded:
-        has_dup = len(set(head_ids)) < len(head_ids)
-    else:
+    if head is None:
+        _assert_no_null_text(new_docs, where)
         dup = ids.groupBy("doc_id").count().filter("count > 1").limit(1)
         has_dup = dup.count() > 0
+    else:
+        if any(r["_tnull"] for r in head):
+            raise _null_text_error(where)
+        has_dup = len({r["doc_id"] for r in head}) < len(head)
     if has_dup:
         raise ValueError(
             f"{where}: batch repeats a doc_id — duplicate doc_ids are "
@@ -1839,49 +1762,10 @@ def _assert_fresh_doc_ids(
             "rows would inflate N/T and double-count tf in every score); "
             "dedup the batch before indexing"
         )
-    # the shared emptiness-tolerant read: after a delete of EVERY doc the
-    # doclen dir still exists but holds no Spark-visible parquet files —
-    # nothing to collide with, and a raw read would fail schema inference
-    # (round-9 fuzz-found: [ingest, delete-all, ingest]); the empty frame
-    # makes both probes below no-ops
-    from .similarity import _read_index_or_empty
-
-    existing = _read_index_or_empty(
-        spark, f"{path}.doclen", "doc_id bigint, dl bigint"
+    DOCLEN.assert_fresh(
+        spark, f"{path}.doclen", ids, head, where, exclude_batch_id
     )
-    if exclude_batch_id is not None and "batch_id" in existing.columns:
-        existing = existing.filter(F.col("batch_id") != int(exclude_batch_id))
-    if bounded:
-        if not head_ids:
-            return 0  # empty batch — nothing to clash
-        # one SQL string, not Column.isin(list): isin builds one py4j
-        # literal expression per id (measured 2.2 s vs 0.3 s at 2500 ids
-        # for the IDENTICAL pushed-down In plan); doc_id is BIGINT by
-        # contract, int() keeps the interpolation literal-safe — and a
-        # NULL/non-integer id raises the contract error HERE, not an
-        # opaque TypeError from the interpolation (a NULL doc_id can
-        # never be probed for freshness and would silently never clash)
-        if any(i is None or not isinstance(i, int) for i in head_ids):
-            raise ValueError(
-                f"{where}: batch carries a NULL or non-integer doc_id — "
-                "doc_id is the index's BIGINT key by contract (a NULL id "
-                "cannot be freshness-probed and would land an unmatchable "
-                "doclen/postings row)"
-            )
-        clash = existing.filter(
-            f"doc_id IN ({', '.join(str(int(i)) for i in head_ids)})"
-        ).limit(1)
-    else:
-        clash = ids.join(existing.select("doc_id"), "doc_id", "left_semi").limit(1)
-    if clash.count() > 0:
-        raise ValueError(
-            f"{where}: batch re-ingests an already-indexed doc_id — "
-            "duplicate doc_ids are outside the text-index contract "
-            "(duplicate doclen/postings rows would inflate N/T and "
-            "double-count tf in every score); anti-join the batch "
-            "against the doclen sidecar before indexing"
-        )
-    return len(head) if bounded else None
+    return None if head is None else len(head)
 
 
 def build_text_index(spark, docs_df, path: str) -> None:
@@ -1919,13 +1803,7 @@ def build_text_index(spark, docs_df, path: str) -> None:
             F.expr(f"{X.md5_int(X.SPARK, 'token')} % {TEXT_INDEX_BUCKETS}"),
         )
     )
-    # bucket-aligned write (the image index's r11 fix): unaligned, every
-    # shuffle task writes a sliver into every tbucket dir (tasks x 64
-    # files); aligned, each bucket is one file and every pruned read
-    # lists |Q| files
-    postings.repartition("tbucket").write.mode("overwrite").partitionBy(
-        "tbucket"
-    ).parquet(path)
+    POSTINGS.build(postings, path)
     dl = (
         spark.read.parquet(path)
         .groupBy("doc_id")
@@ -1979,25 +1857,18 @@ def _indexed_inputs(spark, path: str, terms: tuple[str, ...]):
     literal bodies.  Returns (post_df, dl_df, n_body, t_body)."""
     from pyspark.sql import functions as F
 
-    from ..operators.similarity import _read_index_or_empty
-
     buckets = sorted({_token_bucket(t) for t in terms})
     srow = spark.read.parquet(f"{path}.stats").collect()[0]
-    # _read_index_or_empty: a compliance delete of every doc removes all
-    # postings/doclen partition dirs — the emptied index must stay
-    # queryable (zero results), not raise on schema inference (the
-    # round-9 lifecycle fuzz's [ingest, delete-all, query] sequence)
+    # emptiness-tolerant reads: a compliance delete of every doc removes
+    # all postings/doclen partition dirs — the emptied index must stay
+    # queryable (zero results), not raise on schema inference
     post = (
-        _read_index_or_empty(
-            spark, path, "doc_id bigint, token string, tf bigint, tbucket int"
-        )
+        POSTINGS.read(spark, path)
         .filter(F.col("tbucket").isin(buckets))
         .filter(F.col("token").isin(list(terms)))
         .select("doc_id", "token", "tf")
     )
-    dl = _read_index_or_empty(
-        spark, f"{path}.doclen", "doc_id bigint, dl bigint"
-    )
+    dl = DOCLEN.read(spark, f"{path}.doclen")
     n_body = f"SELECT CAST({int(srow['n_docs'])} AS BIGINT) AS n_docs"
     t_body = f"SELECT CAST({int(srow['t_tok'])} AS BIGINT) AS t_tok"
     return post, dl, n_body, t_body
@@ -2133,14 +2004,12 @@ def hybrid_rrf_multi_indexed(
 def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
     """One micro-batch's index landing — the REPLAY-IDEMPOTENT streaming
     form of ``text_index_append``: postings land under
-    ``tbucket=<b>/batch_id=<n>`` and doclen under ``batch_id=<n>`` with
-    DYNAMIC partition overwrite, so an at-least-once replay overwrites
-    exactly its own (bucket, batch) slices instead of double-appending
-    (the flat append form is NOT replay-safe — that is the batch-job
-    path).  Term-routed pruning still holds: ``tbucket`` stays the
-    top-level partition, the extra ``batch_id`` level only subdivides
-    files inside a bucket.  The stats sidecar is maintained by
-    ``_ingest_stats_update`` after every landing: an O(batch)
+    ``tbucket=<b>/batch_id=<n>`` and doclen under ``batch_id=<n>`` (the
+    index table's streamed ingest — refuses a flat index), so an
+    at-least-once replay overwrites exactly its own (bucket, batch) slices
+    instead of double-appending.  Term-routed pruning still holds:
+    ``tbucket`` stays the top-level partition.  The stats sidecar is
+    maintained by ``_ingest_stats_update`` after every landing: an O(batch)
     slice-set-certified increment when this batch is provably a new
     slice over exactly the set the stored row aggregates, a full doclen
     rebuild whenever the certificate does not hold (replay, re-owned
@@ -2152,24 +2021,13 @@ def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
 
     from .staging import staged_views
 
-    if _text_index_layout(path) == "flat":
-        raise ValueError(
-            "text_index_ingest_batch into a FLAT (build_text_index/append) "
-            "index would mix partition depths under tbucket=* and break "
-            "every reader — stream into a fresh path (stats/doclen converge "
-            "from the landings), or keep maintaining the flat index via "
-            "text_index_append"
-        )
+    POSTINGS.check_layout(path, "batched")
     # one driver collect enforces NULL-text + intra-batch dup + freshness
     # AND reports emptiness (bounded batches) — three contract probes and
     # the caller's would-be emptiness job folded into a single job
     n_batch = _assert_fresh_doc_ids(
-        bspark,
-        batch_df,
-        path,
-        "text_index_ingest_batch",
+        bspark, batch_df, path, "text_index_ingest_batch",
         exclude_batch_id=batch_id,
-        check_null_text=True,
     )
     if n_batch == 0:
         return  # empty batch: nothing to land, stats unchanged
@@ -2189,40 +2047,11 @@ def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
         F.count(F.lit(1)).cast("long").alias("tf")
     )
     with staged_views(bspark, p=postings_base) as v:
-        postings = bspark.sql(
-            f"SELECT doc_id, token, tf, "
-            f"{X.md5_int(X.SPARK, 'token')} % {TEXT_INDEX_BUCKETS} AS tbucket, "
-            f"CAST({int(batch_id)} AS BIGINT) AS batch_id "
-            f"FROM {v.p}"
-        )
-        (
-            # bucket-aligned landing (the image index's r11 fix applied
-            # to the text index): without the repartition every shuffle
-            # task writes a sliver into EVERY tbucket dir — up to
-            # tasks x 64 tiny files per batch; aligned, each (bucket,
-            # batch) slice is one file, so every later pruned read,
-            # freshness probe and stats rebuild lists B files per
-            # bucket, not tasks x B
-            postings.repartition("tbucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tbucket", "batch_id")
-            .parquet(path)
-        )
-        dl = bspark.sql(
-            f"SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl "
-            f"FROM {v.p} GROUP BY doc_id"
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        (
-            # one file per batch landing: the doclen sidecar is read back
-            # every micro-batch (stats rebuild + freshness probe) — a
-            # batch-scale coalesce keeps that listing at B files total
-            dl.coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{path}.doclen")
-        )
+        POSTINGS.ingest(bspark.sql(_bucketed_postings_sql(v.p)), batch_id, path)
+        # one file per batch landing: the doclen sidecar is read back
+        # every micro-batch (stats rebuild + freshness probe), so its
+        # listing stays at B files total
+        DOCLEN.ingest(bspark.sql(_doclen_sql(v.p)), batch_id, f"{path}.doclen")
         # THIS batch's stats contribution from the staged postings — one
         # batch-scale aggregation, so the watermark fast path below never
         # touches the corpus-scale doclen sidecar
@@ -2239,29 +2068,19 @@ def compact_streamed_text_index(
     spark, path: str, upto_batch_id: int
 ) -> dict[str, int]:
     """Index maintenance for the STREAMED layout: each token bucket's
-    ``batch_id=<n>`` subpaths below the committed watermark fold into the
-    reserved ``batch_id=-1`` generation — literally
-    ``compact_batch_landings`` run per bucket directory (and once on the
-    doclen sidecar), so the watermark-coupling contract, the fold-manifest
-    crash safety, and the replay-ownership rule (a replayed batch
-    overwrites its own subpath; folded history lives at -1, below every
-    real batch id) are inherited verbatim.  Term-routed pruning is
-    untouched (tbucket stays the top-level partition)."""
-    from pathlib import Path
-
-    from ..sinks.writers import compact_batch_landings
-
-    out: dict[str, int] = {}
-    for sub in sorted(Path(path).glob("tbucket=*")):
-        try:
-            int(sub.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        out[sub.name] = compact_batch_landings(spark, str(sub), upto_batch_id)
-    out["doclen"] = compact_batch_landings(
-        spark, f"{path}.doclen", upto_batch_id
-    )
-    return out
+    ``batch_id=<n>`` subpaths below the committed watermark — and the
+    doclen sidecar's — fold into the reserved ``batch_id=-1`` generation
+    (the index table's ``compact_streamed``, inheriting the
+    watermark-coupling contract, the fold-manifest crash safety and the
+    replay-ownership rule).  Term-routed pruning is untouched."""
+    return {
+        **POSTINGS.compact_streamed(spark, path, upto_batch_id),
+        "doclen": sum(
+            DOCLEN.compact_streamed(
+                spark, f"{path}.doclen", upto_batch_id
+            ).values()
+        ),
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -2401,23 +2220,15 @@ def text_index_append(spark, path: str, new_docs) -> None:
     append time, so N cannot silently drift.
 
     Layout contract: append belongs to the FLAT (build_text_index)
-    layout; appending flat files into a streamed ``tbucket/batch_id``
-    index would mix partition depths and break every reader, so it
-    refuses (route through ``text_index_ingest_batch`` instead)."""
+    layout; the index table refuses a streamed ``tbucket/batch_id`` index
+    (route through ``text_index_ingest_batch`` instead)."""
     from pyspark.sql import functions as F
 
     from .staging import staged_views
 
-    if _text_index_layout(path) == "batched":
-        raise ValueError(
-            "text_index_append into a STREAMED (tbucket/batch_id) index "
-            "would mix partition depths — route new docs through "
-            "text_index_ingest_batch instead"
-        )
+    POSTINGS.check_layout(path, "flat")
     # one contract collect: NULL-text + dup + freshness (bounded batches)
-    _assert_fresh_doc_ids(
-        spark, new_docs, path, "text_index_append", check_null_text=True
-    )
+    _assert_fresh_doc_ids(spark, new_docs, path, "text_index_append")
     view = "__text_index_append_docs"
     new_docs.createOrReplaceTempView(view)
     try:
@@ -2433,35 +2244,27 @@ def text_index_append(spark, path: str, new_docs) -> None:
         F.count(F.lit(1)).alias("tf")
     )
     with staged_views(spark, p=postings_base) as v:
-        postings = spark.sql(
-            f"SELECT doc_id, token, tf, "
-            f"{X.md5_int(X.SPARK, 'token')} % {TEXT_INDEX_BUCKETS} AS tbucket "
-            f"FROM {v.p}"
-        )
-        # bucket-aligned append: one file per touched bucket per append
-        # (unaligned, tasks x buckets slivers — see build_text_index)
-        postings.repartition("tbucket").write.mode("append").partitionBy(
-            "tbucket"
-        ).parquet(path)
-        spark.sql(
-            f"SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl "
-            f"FROM {v.p} GROUP BY doc_id"
-        ).write.mode("append").parquet(f"{path}.doclen")
+        POSTINGS.append(spark.sql(_bucketed_postings_sql(v.p)), path)
+        DOCLEN.append(spark.sql(_doclen_sql(v.p)), f"{path}.doclen")
     _rebuild_stats(spark, path)
 
 
-def _fold_parquet_dir(spark, dir_path, target_bytes: int) -> int:
-    """Fold every ``*.parquet`` file directly inside ``dir_path`` toward
-    ~``target_bytes`` files — delegates to the ONE shared crash-safe fold
-    core (``sinks.writers.fold_parquet_files``: manifest committed before
-    any rename, crashed passes settled first), so the manifest protocol
-    cannot drift between the landing-table and index call sites."""
-    from pathlib import Path
+def _bucketed_postings_sql(postings: str) -> str:
+    """(doc_id, token, tf) rows of a batch's staged postings with their
+    token bucket — the partition key every postings landing writes."""
+    return (
+        f"SELECT doc_id, token, tf, "
+        f"{X.md5_int(X.SPARK, 'token')} % {TEXT_INDEX_BUCKETS} AS tbucket "
+        f"FROM {postings}"
+    )
 
-    from ..sinks.writers import fold_parquet_files
 
-    inputs = sorted(str(p) for p in Path(dir_path).glob("*.parquet"))
-    return fold_parquet_files(spark, inputs, dir_path, target_bytes)
+def _doclen_sql(postings: str) -> str:
+    """Doc lengths from staged postings (dl = SUM(tf) == token count)."""
+    return (
+        f"SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl "
+        f"FROM {postings} GROUP BY doc_id"
+    )
 
 
 def compact_text_index(
@@ -2483,21 +2286,12 @@ def compact_text_index(
     file listing degrades linearly with ingest count.
 
     Returns ``{subdir_name: file_count}`` for every folded directory."""
-    from pathlib import Path
-
-    out: dict[str, int] = {}
-    for sub in sorted(Path(path).glob("tbucket=*")):
-        # integer-suffix guard (same rule as compact_batch_landings'
-        # subdir walk): a crash-leftover `tbucket=N__compact` staging dir
-        # must not be treated as a bucket — the fold core deletes such
-        # leftovers when it next touches bucket N
-        try:
-            int(sub.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        out[sub.name] = _fold_parquet_dir(spark, sub, target_bytes)
-    out["doclen"] = _fold_parquet_dir(spark, f"{path}.doclen", target_bytes)
-    return out
+    return {
+        **POSTINGS.compact(spark, path, target_bytes),
+        "doclen": sum(
+            DOCLEN.compact(spark, f"{path}.doclen", target_bytes).values()
+        ),
+    }
 
 
 def text_index_delete(spark, path: str, doc_ids) -> None:
@@ -2506,7 +2300,7 @@ def text_index_delete(spark, path: str, doc_ids) -> None:
     trace of ``doc_ids`` from the inverted index.
 
     - postings: targeted rewrite of only the (tbucket[, batch_id])
-      partitions holding the docs' tokens (delete_rows_partitioned);
+      partitions holding the docs' tokens (the index table's delete);
     - doclen sidecar: per-batch rewrite on the streamed layout, full
       rewrite on the flat one (the sidecar is doc_id -> dl, one row per
       doc — the bounded-side-table case);
@@ -2517,18 +2311,7 @@ def text_index_delete(spark, path: str, doc_ids) -> None:
     so every post-delete BM25/QL score reflects the smaller corpus —
     exactly what a rebuild on the filtered corpus would produce
     (pytest-pinned bit-parity)."""
-    from ..sinks.writers import delete_rows_partitioned
-
-    layout = _text_index_layout(path)
-    if layout is None:
+    if POSTINGS.delete(spark, path, doc_ids) is None:
         return
-    pcols = ["tbucket"] if layout == "flat" else ["tbucket", "batch_id"]
-    delete_rows_partitioned(spark, path, "doc_id", doc_ids, pcols)
-    from pathlib import Path
-
-    dl_path = f"{path}.doclen"
-    dl_batched = any(Path(dl_path).glob("batch_id=*"))
-    delete_rows_partitioned(
-        spark, dl_path, "doc_id", doc_ids, ["batch_id"] if dl_batched else []
-    )
+    DOCLEN.delete(spark, f"{path}.doclen", doc_ids)
     _rebuild_stats(spark, path)

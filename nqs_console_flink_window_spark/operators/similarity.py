@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sinks import index_table as IT
+
 # Exact decimal dot product of two float arrays, both engines.  Floats are
 # widened to DOUBLE before multiplying (DuckDB's float->decimal cast is
 # lossy — see functions/dialect.py), products rounded into DECIMAL(30,15)
@@ -319,6 +321,15 @@ IVF_SEED = 42
 IVF_TRAIN_SAMPLE = 100_000  # quantizer never trains on more vectors than this
 IVF_ITERS = 20
 
+# the persisted IVF indexes: cell-partitioned vectors (IVF) and
+# cell-partitioned residual codes (IVF-PQ) — one index-table lifecycle
+IVF = IT.IndexTable(
+    "cell", "vec_id", "vec_id bigint, embedding array<float>, cell int"
+)
+IVFPQ = IT.IndexTable(
+    "cell", "vec_id", "vec_id bigint, pq_code array<int>, cell int"
+)
+
 
 def lloyd_fit(mat: np.ndarray, k: int, rng: np.random.RandomState) -> np.ndarray:
     """Deterministic Lloyd's k-means: seeded init on sample rows, 20 rounds
@@ -464,39 +475,8 @@ def build_ivf_index(df: DataFrame, path: str, vec_col: str = "embedding") -> Non
     partition pruning at the file-listing level — Spark never opens, reads,
     or schedules the other cells' files at all."""
     assigned, centers = ivf_assignments(df, vec_col)
-    # cell-aligned write (the image index's r11 discipline): unaligned,
-    # every task writes a sliver into every cell dir (tasks x cells tiny
-    # files at scale); aligned, each cell is one file per build and a
-    # probe's nprobe listing stays nprobe files
-    assigned.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
+    IVF.build(assigned, path)
     _write_centroids(df.sparkSession, centers, path)
-
-
-def _ivf_layout(path: str) -> str | None:
-    """Which physical layout the index at ``path`` carries: ``"flat"``
-    (build_ivf_index / ivf_index_append — data files directly under
-    ``cell=N/``), ``"batched"`` (streamed ingest — ``cell=N/batch_id=M``),
-    or ``None`` (no data yet, only the centroids sidecar).  Spark cannot
-    read a directory mixing both partition depths
-    (CONFLICTING_PARTITION_COLUMN_NAMES), so the two maintenance paths
-    must refuse each other's layouts instead of corrupting the index."""
-    from pathlib import Path
-
-    kinds = set()
-    for sub in Path(path).glob("cell=*"):
-        if any(sub.glob("batch_id=*")):
-            kinds.add("batched")
-        if any(sub.glob("*.parquet")):
-            kinds.add("flat")
-    if len(kinds) > 1:
-        raise ValueError(
-            f"ivf index at {path} mixes flat and batched cell layouts — "
-            "unreadable by Spark; rebuild it (build_ivf_index) or remove "
-            "the foreign-layout files"
-        )
-    return kinds.pop() if kinds else None
 
 
 def ivf_index_append(
@@ -517,19 +497,11 @@ def ivf_index_append(
     ``compact_ivf_index`` (the text index's fold treatment).
 
     Layout contract: append belongs to the FLAT (build_ivf_index) layout;
-    appending flat files into a streamed ``cell/batch_id`` index would mix
-    partition depths and break every subsequent read, so it refuses."""
-    if _ivf_layout(path) == "batched":
-        raise ValueError(
-            "ivf_index_append into a STREAMED (cell/batch_id) index would "
-            "mix partition depths — route new vectors through "
-            "ivf_index_ingest_batch instead"
-        )
+    the index table refuses a streamed ``cell/batch_id`` index."""
     centers = _read_centroids(spark, path)
-    new_vecs.withColumn(
-        "cell", assign_cells_udf(centers)(F.col(vec_col))
-    ).repartition("cell").write.mode("append").partitionBy("cell").parquet(
-        path
+    IVF.append(
+        new_vecs.withColumn("cell", assign_cells_udf(centers)(F.col(vec_col))),
+        path,
     )
 
 
@@ -538,118 +510,33 @@ def ivf_index_ingest_batch(
     vec_col: str = "embedding",
 ) -> None:
     """One micro-batch's IVF landing — the REPLAY-IDEMPOTENT streaming form
-    of ``ivf_index_append`` (the text index's ``text_index_ingest_batch``
-    treatment applied to the vector index): vectors route through the
-    persisted centroids and land under ``cell=<c>/batch_id=<n>`` with
-    DYNAMIC partition overwrite, so an at-least-once replay overwrites
-    exactly its own (cell, batch) slices instead of double-appending.
-    nprobe partition pruning still holds: ``cell`` stays the top-level
-    partition, the extra ``batch_id`` level only subdivides files inside a
-    cell.  The quantizer must already be persisted — streaming ingest
-    never re-fits, and a pure streaming build bootstraps with
-    ``ivf_fit_centroids`` (quantizer ONLY; a prior ``build_ivf_index``
-    leaves FLAT data files under ``cell=N/`` whose partition depth
-    conflicts with the ``cell/batch_id`` landings, so ingest into a flat
-    layout refuses instead of corrupting the index)."""
-    if _ivf_layout(path) == "flat":
-        raise ValueError(
-            "ivf_index_ingest_batch into a FLAT (build_ivf_index/append) "
-            "index would mix partition depths and break every reader — "
-            "bootstrap a streaming index with ivf_fit_centroids (quantizer "
-            "only), or keep maintaining the flat index via ivf_index_append"
-        )
+    of ``ivf_index_append``: vectors route through the persisted centroids
+    and land under ``cell=<c>/batch_id=<n>`` (the index table's streamed
+    ingest), so an at-least-once replay overwrites exactly its own (cell,
+    batch) slices.  nprobe partition pruning still holds: ``cell`` stays
+    the top-level partition.  The quantizer must already be persisted —
+    streaming ingest never re-fits, and a pure streaming build bootstraps
+    with ``ivf_fit_centroids`` (quantizer ONLY; a prior
+    ``build_ivf_index`` leaves FLAT data files under ``cell=N/``, which
+    the ingest refuses instead of corrupting the index)."""
     centers = _read_centroids(bspark, path)
-    (
-        batch_df.withColumn("cell", assign_cells_udf(centers)(F.col(vec_col)))
-        .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        .repartition("cell")  # one file per (cell, batch) slice
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "batch_id")
-        .parquet(path)
+    IVF.ingest(
+        batch_df.withColumn("cell", assign_cells_udf(centers)(F.col(vec_col))),
+        batch_id,
+        path,
     )
 
 
-def compact_streamed_ivf_index(
-    spark, path: str, upto_batch_id: int
-) -> dict[str, int]:
-    """Index maintenance for the STREAMED IVF layout: each cell's
-    ``batch_id=<n>`` subpaths below the committed watermark fold into the
-    reserved ``batch_id=-1`` generation — ``compact_batch_landings`` run
-    per cell directory, so the watermark-coupling contract, the
-    fold-manifest crash safety, and the replay-ownership rule are
-    inherited verbatim from the ONE shared fold core.  nprobe pruning is
-    untouched (cell stays the top-level partition).  Returns
-    ``{cell_dir: file_count}``."""
-    from pathlib import Path
-
-    from ..sinks.writers import compact_batch_landings
-
-    out: dict[str, int] = {}
-    for sub in sorted(Path(path).glob("cell=*")):
-        try:
-            int(sub.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        out[sub.name] = compact_batch_landings(spark, str(sub), upto_batch_id)
-    return out
-
-
-def compact_ivf_index(
-    spark, path: str, target_bytes: int = 128 * 1024 * 1024
-) -> dict[str, int]:
-    """Index maintenance for ``ivf_index_append``'s small files: fold each
-    cell's vector files toward ~``target_bytes`` targets via the shared
-    crash-safe fold core.  Pure layout change — rows, the ``cell=N``
-    partition encoding, and nprobe pruning are all preserved; the
-    centroids sidecar needs no touch (appends never change it).  The
-    Lucene segment-merge analogue for the vector index, closing the same
-    operational gap the text index closed in round 7."""
-    from pathlib import Path
-
-    from ..sinks.writers import fold_parquet_files
-
-    out: dict[str, int] = {}
-    for sub in sorted(Path(path).glob("cell=*")):
-        try:
-            int(sub.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        inputs = sorted(str(p) for p in sub.glob("*.parquet"))
-        out[sub.name] = fold_parquet_files(spark, inputs, sub, target_bytes)
-    return out
-
-
-def _read_index_or_empty(spark, path: str, empty_schema: str) -> DataFrame:
-    """Read a cell-partitioned index, tolerating the FULLY-EMPTIED state: a
-    compliance delete of every vector removes every cell partition dir, so
-    spark.read cannot infer a schema from the bare index root — an emptied
-    index must stay QUERYABLE (zero results), not raise (the round-9
-    lifecycle fuzz found exactly this: [ingest, delete-all, query]).  Only
-    the columns the query paths consume need to exist on the empty frame."""
-    if not index_parquet_files(path):
-        return spark.createDataFrame([], empty_schema)
-    return spark.read.parquet(path)
-
-
-def index_parquet_files(path: str) -> list:
-    """Parquet files Spark's FileIndex would actually list under ``path``:
-    underscore/dot-prefixed path segments (``__delete_staging``, fold
-    staging, metadata dirs) are invisible to Spark, so a crashed delete's
-    staged files must not make an otherwise-emptied index look
-    non-empty (the read would then fail schema inference at query
-    time)."""
-    from pathlib import Path
-
-    root = Path(path)
-    return [
-        p
-        for p in root.rglob("*.parquet")
-        if not any(
-            seg.startswith(("_", "."))
-            for seg in p.relative_to(root).parts
-        )
-    ]
+# layout-only verbs — the index table's lifecycle, verbatim (shared by the
+# IVF and IVF-PQ indexes: they rewrite per cell directory and never
+# interpret row columns).  compact_ivf_index folds append small files (the
+# Lucene segment-merge analogue); compact_streamed_ivf_index folds each
+# cell's landings below the committed watermark into batch_id=-1;
+# ivf_index_delete is the compliance delete — the centroids sidecar is
+# deliberately untouched (deletion never re-fits, like append).
+compact_ivf_index = IVF.compact
+compact_streamed_ivf_index = IVF.compact_streamed
+ivf_index_delete = IVF.delete
 
 
 def ivf_topk_indexed(
@@ -667,9 +554,7 @@ def ivf_topk_indexed(
     probe_cells = sorted(d2, key=d2.get)[:IVF_NPROBE]
 
     q_lit = "array(" + ", ".join(f"CAST({float(x)!r} AS FLOAT)" for x in query_vec) + ")"
-    cand = _read_index_or_empty(
-        spark, path, "vec_id bigint, embedding array<float>, cell int"
-    ).filter(F.col("cell").isin(probe_cells))
+    cand = IVF.read(spark, path).filter(F.col("cell").isin(probe_cells))
     scored = cand.withColumn("cosine", F.expr(cosine_spark("embedding", q_lit)))
     return (
         scored.orderBy(F.col("cosine").desc(), F.col("vec_id"))
@@ -781,9 +666,7 @@ def ivf_multi_indexed(
     all_cells = sorted(
         {c for qid in queries for c in _route_cells(centers, queries[qid])}
     )
-    cand = _read_index_or_empty(
-        spark, path, "vec_id bigint, embedding array<float>, cell int"
-    ).filter(F.col("cell").isin(all_cells))
+    cand = IVF.read(spark, path).filter(F.col("cell").isin(all_cells))
     scored = cand.join(F.broadcast(probes), "cell").select(
         "query_id",
         "vec_id",
@@ -1477,9 +1360,7 @@ def build_ivfpq_index(df: DataFrame, path: str, vec_col: str = "embedding") -> N
     coded = pq_encode_residual(assigned, books, centers, vec_col).select(
         "vec_id", "pq_code", "cell"
     )
-    coded.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
+    IVFPQ.build(coded, path)
     _write_centroids(df.sparkSession, centers, path)
     _write_codebooks(df.sparkSession, books, path)
 
@@ -1497,12 +1378,6 @@ def ivfpq_index_ingest_batch(
     exactly its own slices.  Bootstrap a pure streaming index with
     ``ivfpq_fit``; a flat (build_ivfpq_index) layout refuses ingest for
     the same mixed-partition-depth reason as the IVF/text indexes."""
-    if _ivf_layout(path) == "flat":
-        raise ValueError(
-            "ivfpq_index_ingest_batch into a FLAT (build_ivfpq_index) "
-            "index would mix partition depths and break every reader — "
-            "bootstrap a streaming index with ivfpq_fit (quantizers only)"
-        )
     centers = _read_centroids(bspark, path)
     books = _read_codebooks(bspark, path)
     coded = pq_encode_residual(
@@ -1511,14 +1386,7 @@ def ivfpq_index_ingest_batch(
         centers,
         vec_col,
     ).select("vec_id", "pq_code", "cell")
-    (
-        coded.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        .repartition("cell")  # one file per (cell, batch) slice
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "batch_id")
-        .parquet(path)
-    )
+    IVFPQ.ingest(coded, batch_id, path)
 
 
 def ivfpq_topk_indexed(
@@ -1546,9 +1414,7 @@ def ivfpq_topk_indexed(
     probe_cells = [int(c) for c in d2.argsort()[:IVF_NPROBE]]
     est = _adc_cell_expr(_adc_lut(books, q), centers @ q)
     short = (
-        _read_index_or_empty(
-            spark, path, "vec_id bigint, pq_code array<int>, cell int"
-        )
+        IVFPQ.read(spark, path)
         .filter(F.col("cell").isin(probe_cells))
         .withColumn("est_dot", F.expr(est))
         .orderBy(F.col("est_dot").desc(), F.col("vec_id"))
@@ -1878,22 +1744,3 @@ JOIN (
 ) pl USING (d)
 GROUP BY vec_id, j
 """
-
-
-def ivf_index_delete(spark, path: str, vec_ids) -> None:
-    """Compliance deletion for the vector index — the lifecycle verb next
-    to build/append/ingest/compact: remove ``vec_ids`` by targeted
-    rewrite of only the (cell[, batch_id]) partitions holding them; a
-    fully-emptied cell's directory disappears (and partition pruning
-    simply never lists it again).  The centroids sidecar is deliberately
-    untouched: deletion never re-fits, exactly like the append contract —
-    re-clustering after heavy drift is an offline build_ivf_index, as in
-    production ANN systems.  Idempotent and crash-convergent
-    (delete_rows_partitioned's re-run rule)."""
-    from ..sinks.writers import delete_rows_partitioned
-
-    layout = _ivf_layout(path)
-    if layout is None:
-        return
-    pcols = ["cell"] if layout == "flat" else ["cell", "batch_id"]
-    delete_rows_partitioned(spark, path, "vec_id", vec_ids, pcols)

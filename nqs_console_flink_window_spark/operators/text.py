@@ -53,14 +53,6 @@ def lang_guess_from(en: str, de: str, es: str) -> str:
     )
 
 
-def lang_guess_expr(d: str, text: str = "text") -> str:
-    return lang_guess_from(
-        stopword_hits_expr(d, "en", text),
-        stopword_hits_expr(d, "de", text),
-        stopword_hits_expr(d, "es", text),
-    )
-
-
 def avg_token_len_from(d: str, arr: str) -> str:
     total = X.arr_sum_bigint(d, X.arr_transform(d, arr, "x -> CAST(length(x) AS BIGINT)"))
     n = X.arr_size(d, arr)

@@ -7,10 +7,9 @@ index literally an image index over the frame-augmented band space —
 - same ``bband`` partition bucketing, so probes prune at the file
   listing;
 - same lifecycle verbs (``build_image_index`` / ``image_index_append`` /
-  ``image_index_ingest_batch`` with the ``bands_fn`` hook;
-  ``compact_image_index`` / ``compact_streamed_image_index`` /
-  ``image_index_delete`` reused unchanged — they never look at band
-  semantics);
+  ``image_index_ingest_batch`` with the ``bands_fn`` hook; compaction,
+  deletion and the read are the band index table's
+  (``sinks.index_table``) — they never look at band semantics);
 - same uniqueness contract (the per-(doc_id, band) multiplicity check
   is exact even though video docs carry a VARIABLE number of rows —
   content frames only).
@@ -35,10 +34,12 @@ from pyspark.sql import functions as F
 
 from ..functions import dialect as X
 from .image_index import (
+    BANDS,
     _bband_col,
     build_image_index,
     image_index_append,
     image_index_ingest_batch,
+    read_image_index,
 )
 from .multimodal import DHASH_BANDS, DHASH_MAX_HAMMING, extract_video_fp
 
@@ -83,13 +84,11 @@ def video_index_ingest_batch(
 
 
 # compaction and compliance deletion operate purely on the parquet layout
-# (fold core / staged-commit manifest) — the image verbs apply verbatim:
-from .image_index import compact_image_index as compact_video_index  # noqa: E402,F401
-from .image_index import (  # noqa: E402,F401
-    compact_streamed_image_index as compact_streamed_video_index,
-)
-from .image_index import image_index_delete as video_index_delete  # noqa: E402,F401
-from .image_index import read_image_index as read_video_index  # noqa: E402,F401
+# — the band index table's lifecycle applies verbatim:
+compact_video_index = BANDS.compact
+compact_streamed_video_index = BANDS.compact_streamed
+video_index_delete = BANDS.delete
+read_video_index = read_image_index
 
 
 def incremental_video_dedup(
@@ -114,8 +113,9 @@ def incremental_video_dedup(
     plan-guard-safe form) with its folded key re-folded at the shifted
     frame, so the candidate + verify joins stay pure hash equi-joins.
 
-    Returns ``(kept_ids, kept_bands)``: ingest ``kept_bands`` (via
-    ``_ingest_bands`` / append) to admit the batch into the index.
+    Returns ``(kept_ids, kept_bands)``: land ``kept_bands``
+    (``image_index.BANDS.ingest`` / ``append``) to admit the batch into
+    the index.
 
     ``bands_fn`` (round 12): any extractor producing the folded band
     shape (doc_id, band = unit_idx * DHASH_BANDS + b, bv) slots in —

@@ -1788,11 +1788,11 @@ def incremental_image_dedup_batches(spark: SparkSession, sf_dir: str) -> DataFra
     try:
         idx = f"{base}/index"
         _kept1, bands1 = II.incremental_image_dedup(spark, media1, None)
-        II._ingest_bands(spark, bands1, 0, idx)
+        II.BANDS.ingest(bands1, 0, idx)
         _kept2, bands2 = II.incremental_image_dedup(
             spark, media2, II.read_image_index(spark, idx)
         )
-        II._ingest_bands(spark, bands2, 1, idx)
+        II.BANDS.ingest(bands2, 1, idx)
         # survivors come back FROM the landed index — the whole persisted
         # path sits inside the value hash (the web_curate_pipeline rule)
         out = (
@@ -1850,11 +1850,11 @@ def incremental_video_dedup_batches(
     try:
         idx = f"{base}/index"
         _kept1, bands1 = VI.incremental_video_dedup(spark, media1, None)
-        II._ingest_bands(spark, bands1, 0, idx)
+        II.BANDS.ingest(bands1, 0, idx)
         _kept2, bands2 = VI.incremental_video_dedup(
             spark, media2, VI.read_video_index(spark, idx)
         )
-        II._ingest_bands(spark, bands2, 1, idx)
+        II.BANDS.ingest(bands2, 1, idx)
         out = (
             VI.read_video_index(spark, idx)
             .select(
@@ -1903,11 +1903,11 @@ def incremental_audio_dedup_batches(
     try:
         idx = f"{base}/index"
         _kept1, bands1 = AI.incremental_audio_dedup(spark, media1, None)
-        II._ingest_bands(spark, bands1, 0, idx)
+        II.BANDS.ingest(bands1, 0, idx)
         _kept2, bands2 = AI.incremental_audio_dedup(
             spark, media2, AI.read_audio_index(spark, idx)
         )
-        II._ingest_bands(spark, bands2, 1, idx)
+        II.BANDS.ingest(bands2, 1, idx)
         out = (
             AI.read_audio_index(spark, idx)
             .select(
@@ -1956,11 +1956,11 @@ def incremental_audio_spectral_dedup_batches(
         _kept1, bands1 = AI.incremental_audio_spectral_dedup(
             spark, media1, None
         )
-        II._ingest_bands(spark, bands1, 0, idx)
+        II.BANDS.ingest(bands1, 0, idx)
         _kept2, bands2 = AI.incremental_audio_spectral_dedup(
             spark, media2, AI.read_audio_index(spark, idx)
         )
-        II._ingest_bands(spark, bands2, 1, idx)
+        II.BANDS.ingest(bands2, 1, idx)
         out = (
             AI.read_audio_index(spark, idx)
             .select(
@@ -2047,11 +2047,11 @@ def incremental_audio_shifted_dedup_batches(
         _kept1, bands1 = AI.incremental_audio_shifted_dedup(
             spark, media1, None
         )
-        II._ingest_bands(spark, bands1, 0, idx)
+        II.BANDS.ingest(bands1, 0, idx)
         _kept2, bands2 = AI.incremental_audio_shifted_dedup(
             spark, media2, AI.read_audio_index(spark, idx)
         )
-        II._ingest_bands(spark, bands2, 1, idx)
+        II.BANDS.ingest(bands2, 1, idx)
         out = (
             AI.read_audio_index(spark, idx)
             .select(

@@ -228,9 +228,10 @@ def _repair_crashed_compaction(gen_path: Path) -> None:
 def fold_parquet_files(
     spark, inputs: list[str], dest_dir, target_bytes: int = 128 * 1024 * 1024
 ) -> int:
-    """THE fold core shared by ``compact_batch_landings`` and the text
-    index's ``compact_text_index``: merge ``inputs`` (parquet file paths —
-    may include files already living in ``dest_dir``) into
+    """THE fold core shared by ``compact_batch_landings`` and the index
+    table's ``compact`` (``sinks.index_table``): merge ``inputs``
+    (parquet file paths — may include files already living in
+    ``dest_dir``) into
     ~``target_bytes`` files named ``compact-<stamp>-NNNNN.parquet`` inside
     ``dest_dir``, crash-safe under the fold-manifest protocol
     (``_repair_crashed_compaction``'s schema — one writer, one repairer,
@@ -370,7 +371,7 @@ DELETE_MANIFEST = "__delete_manifest.json"
 DELETE_STAGING = "__delete_staging"
 # max ids inlined as a pushed-down IN filter; above this the delete
 # switches to semi/anti joins against a distributed id frame (same
-# threshold role as retrieval._FRESH_PROBE_INLIST)
+# threshold role as index_table._FRESH_PROBE_INLIST)
 _DELETE_INLIST = 10_000
 
 

@@ -83,10 +83,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return canonicalize_types(df)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_temp_views(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...] | None = None
 ) -> None:

@@ -507,6 +507,34 @@ def ingest_dedup_batch(
     return kept
 
 
+def ingest_media_dedup_batch(
+    bspark: SparkSession,
+    batch_docs: DataFrame,
+    batch_id: int,
+    kept_dir: str,
+    index_dir: str,
+    as_media,
+    gate,
+) -> None:
+    """One micro-batch's perceptual-hash ingest (round 10 — the multimodal
+    twin of ``ingest_dedup_batch``): turn the batch into media ONCE
+    (``as_media``), near-dup-gate it against the standing band index
+    (``gate`` — the image / video / audio family's verified-Hamming rule,
+    never a corpus re-decode), land survivor ids under an idempotent
+    batch_id subpath and the survivors' bands under the index's own
+    (bband, batch_id) slices.  Replay-convergent: the index read sees
+    only batches below the current one (the ``_read_prior_batches`` ``<``
+    rule — a replay must not see its first attempt's bands and drop every
+    survivor as a self-duplicate), and the band landing overwrites
+    exactly its own slices."""
+    from ..operators.image_index import BANDS
+
+    index = BANDS.read(bspark, index_dir, before=batch_id)
+    kept, kept_bands = gate(bspark, as_media(batch_docs), index)
+    W.idempotent_batch_write(kept, kept_dir, batch_id)
+    BANDS.ingest(kept_bands, batch_id, index_dir)
+
+
 def ingest_image_dedup_batch(
     bspark: SparkSession,
     batch_docs: DataFrame,
@@ -514,32 +542,75 @@ def ingest_image_dedup_batch(
     kept_dir: str,
     index_dir: str,
 ) -> None:
-    """One micro-batch's IMAGE ingest (round 10 — the multimodal twin of
-    ``ingest_dedup_batch``): decode the batch ONCE, near-dup-gate it
-    against the standing dHash band index (verified Hamming <=
-    DHASH_MAX_HAMMING — never a corpus re-decode), land survivor ids
-    under an idempotent batch_id subpath and the survivors' bands under
-    the index's own (bband, batch_id) slices.  Replay-convergent: the
-    index read excludes batch_id >= current (the ``_read_prior_batches``
-    ``<`` rule — a replay must not see its first attempt's bands and drop
-    every survivor as a self-duplicate), and the band landing overwrites
-    exactly its own slices."""
-    from ..operators.image_index import (
-        _ingest_bands,
-        incremental_image_dedup,
-        read_image_index,
-    )
+    """The dHash image family's ``ingest_media_dedup_batch``."""
+    from ..operators.image_index import incremental_image_dedup
     from ..operators.multimodal import documents_as_images
 
-    media = documents_as_images(batch_docs)
-    index = read_image_index(bspark, index_dir)
-    if "batch_id" in index.columns:
-        index = index.filter(F.col("batch_id") < int(batch_id))
-    else:
-        index = None  # nothing landed yet (empty frame lacks batch_id)
-    kept, kept_bands = incremental_image_dedup(bspark, media, index)
-    W.idempotent_batch_write(kept, kept_dir, batch_id)
-    _ingest_bands(bspark, kept_bands, batch_id, index_dir)
+    ingest_media_dedup_batch(
+        bspark, batch_docs, batch_id, kept_dir, index_dir,
+        documents_as_images, incremental_image_dedup,
+    )
+
+
+def ingest_video_dedup_batch(
+    bspark: SparkSession,
+    batch_docs: DataFrame,
+    batch_id: int,
+    kept_dir: str,
+    index_dir: str,
+) -> None:
+    """The video family's ``ingest_media_dedup_batch``: frame-augmented
+    band space and the aligned-frame gate (operators/video_index.py)."""
+    from ..operators.multimodal import documents_as_videos
+    from ..operators.video_index import incremental_video_dedup
+
+    ingest_media_dedup_batch(
+        bspark, batch_docs, batch_id, kept_dir, index_dir,
+        documents_as_videos, incremental_video_dedup,
+    )
+
+
+def ingest_audio_dedup_batch(
+    bspark: SparkSession,
+    batch_docs: DataFrame,
+    batch_id: int,
+    kept_dir: str,
+    index_dir: str,
+) -> None:
+    """The audio family's ``ingest_media_dedup_batch``: the
+    waveform-fingerprint extractor (operators/audio_index.py), the image
+    gate's verify rule."""
+    from ..operators.audio_index import incremental_audio_dedup
+    from ..operators.multimodal import documents_as_audio
+
+    ingest_media_dedup_batch(
+        bspark, batch_docs, batch_id, kept_dir, index_dir,
+        documents_as_audio, incremental_audio_dedup,
+    )
+
+
+def _run_media_dedup_stream(
+    docs_stream: DataFrame,
+    kept_dir: str,
+    index_dir: str,
+    checkpoint_dir: str,
+    ingest,
+) -> None:
+    """Drain ``docs_stream`` through a family's per-batch ``ingest``
+    (availableNow; empty batches skip)."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.limit(1).count() == 0:
+            return
+        ingest(batch_df.sparkSession, batch_df, batch_id, kept_dir, index_dir)
+
+    q = (
+        docs_stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def run_image_dedup_stream(
@@ -554,51 +625,10 @@ def run_image_dedup_stream(
     land survivors + their bands (``ingest_image_dedup_batch``).  The
     run_incremental_dedup_stream shape applied to the multimodal column —
     the third index family's streaming front door."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        ingest_image_dedup_batch(
-            batch_df.sparkSession, batch_df, batch_id, kept_dir, index_dir
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_media_dedup_stream(
+        docs_stream, kept_dir, index_dir, checkpoint_dir,
+        ingest_image_dedup_batch,
     )
-    q.awaitTermination()
-
-
-def ingest_video_dedup_batch(
-    bspark: SparkSession,
-    batch_docs: DataFrame,
-    batch_id: int,
-    kept_dir: str,
-    index_dir: str,
-) -> None:
-    """One micro-batch's VIDEO ingest — ``ingest_image_dedup_batch`` with
-    the frame-augmented band space and the aligned-frame gate
-    (operators/video_index.py); same replay-convergence rule (the index
-    read excludes batch_id >= current, the band landing overwrites
-    exactly its own slices)."""
-    from ..operators.image_index import _ingest_bands
-    from ..operators.multimodal import documents_as_videos
-    from ..operators.video_index import (
-        incremental_video_dedup,
-        read_video_index,
-    )
-
-    media = documents_as_videos(batch_docs)
-    index = read_video_index(bspark, index_dir)
-    if "batch_id" in index.columns:
-        index = index.filter(F.col("batch_id") < int(batch_id))
-    else:
-        index = None  # nothing landed yet (empty frame lacks batch_id)
-    kept, kept_bands = incremental_video_dedup(bspark, media, index)
-    W.idempotent_batch_write(kept, kept_dir, batch_id)
-    _ingest_bands(bspark, kept_bands, batch_id, index_dir)
 
 
 def run_video_dedup_stream(
@@ -611,49 +641,10 @@ def run_video_dedup_stream(
     """Streaming video-corpus ingest gate — the fourth index family's
     front door, the run_image_dedup_stream shape over the aligned-frame
     semantics."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        ingest_video_dedup_batch(
-            batch_df.sparkSession, batch_df, batch_id, kept_dir, index_dir
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_media_dedup_stream(
+        docs_stream, kept_dir, index_dir, checkpoint_dir,
+        ingest_video_dedup_batch,
     )
-    q.awaitTermination()
-
-
-def ingest_audio_dedup_batch(
-    bspark: SparkSession,
-    batch_docs: DataFrame,
-    batch_id: int,
-    kept_dir: str,
-    index_dir: str,
-) -> None:
-    """One micro-batch's AUDIO ingest — ``ingest_image_dedup_batch`` with
-    the waveform-fingerprint extractor (operators/audio_index.py); same
-    gate, same replay-convergence rule."""
-    from ..operators.audio_index import (
-        incremental_audio_dedup,
-        read_audio_index,
-    )
-    from ..operators.image_index import _ingest_bands
-    from ..operators.multimodal import documents_as_audio
-
-    media = documents_as_audio(batch_docs)
-    index = read_audio_index(bspark, index_dir)
-    if "batch_id" in index.columns:
-        index = index.filter(F.col("batch_id") < int(batch_id))
-    else:
-        index = None  # nothing landed yet (empty frame lacks batch_id)
-    kept, kept_bands = incremental_audio_dedup(bspark, media, index)
-    W.idempotent_batch_write(kept, kept_dir, batch_id)
-    _ingest_bands(bspark, kept_bands, batch_id, index_dir)
 
 
 def run_audio_dedup_stream(
@@ -665,21 +656,10 @@ def run_audio_dedup_stream(
 ) -> None:
     """Streaming audio-corpus ingest gate — the perceptual-hash family's
     front door over the waveform fingerprint."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        ingest_audio_dedup_batch(
-            batch_df.sparkSession, batch_df, batch_id, kept_dir, index_dir
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_media_dedup_stream(
+        docs_stream, kept_dir, index_dir, checkpoint_dir,
+        ingest_audio_dedup_batch,
     )
-    q.awaitTermination()
 
 
 def run_incremental_dedup_stream(

@@ -318,7 +318,7 @@ def test_shifted_gate_catches_front_trim_strict_gate_misses(
     _k1, bands1 = AI.incremental_audio_shifted_dedup(spark, m1, None)
     from nqs_console_flink_window_spark.operators import image_index as II
 
-    II._ingest_bands(spark, bands1, 0, idx)
+    II.BANDS.ingest(bands1, 0, idx)
     m2 = MM.documents_as_audio_windowed(b2)
     kept2, _ = AI.incremental_audio_shifted_dedup(
         spark, m2, AI.read_audio_index(spark, idx)
@@ -329,7 +329,7 @@ def test_shifted_gate_catches_front_trim_strict_gate_misses(
     sm1 = MM.documents_as_audio(b1)
     _sk1, sbands1 = AI.incremental_audio_dedup(spark, sm1, None)
     sidx = str(tmp_path / "sidx")
-    II._ingest_bands(spark, sbands1, 0, sidx)
+    II.BANDS.ingest(sbands1, 0, sidx)
     sm2 = MM.documents_as_audio(b2)
     skept2, _ = AI.incremental_audio_dedup(
         spark, sm2, AI.read_audio_index(spark, sidx)

@@ -85,6 +85,29 @@ def test_image_index_streamed_matches_build_replays_and_compacts(
         assert len(list(sub.glob("*.parquet"))) == 1, sub
 
 
+def test_image_index_fresh_probe_rejects_null_id_in_oversized_batch(
+    spark, tmp_path, monkeypatch
+) -> None:
+    """A NULL doc_id in a batch above the freshness probe's IN-list bound
+    (lowered here to reach the distributed branch) raises the same
+    contract error as in a bounded batch, instead of landing band rows no
+    probe or delete can ever match."""
+    from nqs_console_flink_window_spark.sinks import index_table as IT
+
+    idx = str(tmp_path / "imgidx")
+    II.image_index_ingest_batch(spark, _media(spark, "doc_id < 5"), 0, idx)
+    bands = II.image_bands(_media(spark, "doc_id >= 10 AND doc_id < 13"))
+    with_null = bands.withColumn(
+        "doc_id",
+        F.when(F.col("doc_id") == 11, F.lit(None)).otherwise(F.col("doc_id")),
+    )
+    monkeypatch.setattr(IT, "_FRESH_PROBE_INLIST", 2)
+    with pytest.raises(ValueError, match="NULL or non-integer"):
+        II.image_index_ingest_batch(
+            spark, with_null, 1, idx, bands_fn=lambda b: b
+        )
+
+
 def test_image_index_fresh_id_contract_and_delete(spark, tmp_path) -> None:
     """Duplicate-ingest refusal (intra-batch and cross-batch, replay
     exempt), compliance deletion through the shared staged-commit core,
@@ -133,7 +156,7 @@ def test_incremental_image_dedup_streamed_matches_batch(spark, tmp_path) -> None
         kept, bands = II.incremental_image_dedup(
             spark, media, II.read_image_index(spark, idx) if b else None
         )
-        II._ingest_bands(spark, bands, b, idx)
+        II.BANDS.ingest(bands, b, idx)
         spark.catalog.refreshByPath(idx)
         for r in kept.collect():
             survivors[r["doc_id"]] = b

@@ -174,12 +174,7 @@ def test_ivfpq_index_lifecycle_interleavings(spark, ops) -> None:
             else:
                 SIM.compact_streamed_ivf_index(spark, idx, next_batch - 1)
             spark.catalog.refreshByPath(idx)
-            assert (
-                SIM._read_index_or_empty(
-                    spark, idx, "vec_id bigint, pq_code array<int>, cell int"
-                ).count()
-                == len(live)
-            )
+            assert SIM.IVFPQ.read(spark, idx).count() == len(live)
             _no_maintenance_leftovers(base)
 
         if not live:

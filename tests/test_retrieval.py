@@ -913,6 +913,39 @@ def test_text_index_rejects_duplicate_doc_ids(spark, tmp_path) -> None:
     RT.text_index_ingest_batch(spark, docs.filter("doc_id % 2 = 0"), 0, sidx)
 
 
+def test_text_index_fresh_probe_rejects_unprobeable_ids(
+    spark, tmp_path, monkeypatch
+) -> None:
+    """The freshness probe rejects ids it cannot probe on BOTH of its
+    branches: a NULL doc_id raises the contract error in a bounded batch
+    AND in an oversized one (the distributed semi-join branch, reached by
+    lowering the IN-list bound — a NULL never matches a join key, so it
+    used to pass silently), and a BOOLEAN doc_id is not an integer id
+    (``bool`` is an ``int`` subclass in Python)."""
+    from nqs_console_flink_window_spark.sinks import index_table as IT
+
+    idx = str(tmp_path / "ti")
+    RT.text_index_ingest_batch(
+        spark,
+        spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string"),
+        0,
+        idx,
+    )
+    nulls = spark.createDataFrame(
+        [(2, "gamma"), (None, "delta"), (3, "epsilon")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(ValueError, match="NULL or non-integer"):
+        RT.text_index_ingest_batch(spark, nulls, 1, idx)
+    with monkeypatch.context() as mp:
+        mp.setattr(IT, "_FRESH_PROBE_INLIST", 2)
+        with pytest.raises(ValueError, match="NULL or non-integer"):
+            RT.text_index_ingest_batch(spark, nulls, 1, idx)
+    bools = spark.createDataFrame([(True, "zeta")], "doc_id boolean, text string")
+    with pytest.raises(ValueError, match="NULL or non-integer"):
+        RT.text_index_ingest_batch(spark, bools, 1, idx)
+
+
 def test_query_terms_with_quotes_are_escaped(spark) -> None:
     """Query terms are interpolated as SQL literals; in the production
     shape they come from a user query table, so a term holding a quote

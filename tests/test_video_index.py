@@ -276,7 +276,7 @@ def test_shifted_ingest_gate_rejects_trimmed_reupload(spark, tmp_path) -> None:
     kept1, bands1 = VI.incremental_video_dedup(
         spark, MM.documents_as_videos(b1), None
     )
-    II._ingest_bands(spark, bands1, 0, idx)
+    II.BANDS.ingest(bands1, 0, idx)
     index = VI.read_video_index(spark, idx)
 
     strict, _ = VI.incremental_video_dedup(

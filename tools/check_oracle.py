@@ -10,6 +10,7 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import pathlib
 import sys
 import time
@@ -19,6 +20,11 @@ import pandas as pd
 
 _REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO))
+# Spark's Python workers import the package too (UDFs, mapInPandas): put
+# the repo on their path as well, so a launch from any directory works
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (str(_REPO), os.environ.get("PYTHONPATH", "")) if p
+)
 
 from nqs_console_flink_window_spark.config import ORACLE_SF_DIR, TABLE_NAMES  # noqa: E402
 from nqs_console_flink_window_spark.plans import all as _all  # noqa: E402,F401
