@@ -35,8 +35,7 @@ from .multimodal import audio_fp_grid_sql, extract_audio_fp
 
 # layout-only verbs: the band index table's lifecycle, verbatim (they
 # never look at band semantics)
-compact_audio_index = BANDS.compact
-compact_streamed_audio_index = BANDS.compact_streamed
+compact_audio_index = compact_streamed_audio_index = BANDS.compact
 audio_index_delete = BANDS.delete
 read_audio_index = read_image_index
 
@@ -66,7 +65,7 @@ def build_audio_index(spark, media: DataFrame, path: str) -> None:
 
 
 def audio_index_append(spark, path: str, media: DataFrame) -> None:
-    """Flat-layout incremental maintenance — the image verb reused."""
+    """Incremental maintenance — the image verb reused."""
     image_index_append(spark, path, media, bands_fn=audio_bands)
 
 

@@ -12,10 +12,11 @@ different extractor) and the video index (video_index.py — frame axis
 folded into the band key) ride ``bands_fn``/``grid_sql_fn`` hooks on
 the verbs and gate below rather than copying them.
 
-The lifecycle itself (flat/streamed layouts and their mutual refusal,
-replay-idempotent ``bband=<b>/batch_id=<n>`` landings, both compaction
-walks, the staged-commit delete, the emptiness-tolerant read and the
-cross-batch doc_id freshness probe) is ``sinks.index_table`` keyed by
+The lifecycle itself (the one ``bband=<b>/batch_id=<n>`` layout with
+build/append in the -1 generation and replay-idempotent streamed
+landings, the compaction fold, the staged-commit delete, the
+emptiness-tolerant read and the cross-batch doc_id freshness probe) is
+``sinks.index_table`` keyed by
 ``bband`` (``BANDS``); this module adds the band extractor, the
 per-(doc_id, band) multiplicity contract and the near-dup gate.
 
@@ -131,10 +132,9 @@ def build_image_index(
 def image_index_append(
     spark, path: str, media: DataFrame, bands_fn=None
 ) -> None:
-    """Incremental maintenance of the FLAT layout: hash NEW images and
-    append their bands into the bband partitions (small-file debt settled
-    by ``compact_image_index``).  Refuses the streamed layout."""
-    BANDS.check_layout(path, "flat")
+    """Incremental maintenance: hash NEW images and append their bands
+    into the bband partitions' -1 generation (small-file debt settled by
+    ``compact_image_index``)."""
     bands = (bands_fn or image_bands)(media)
     _assert_fresh_bands(spark, bands, path, "image_index_append")
     BANDS.append(bands, path)
@@ -145,8 +145,7 @@ def image_index_ingest_batch(
 ) -> None:
     """One micro-batch's landing — the REPLAY-IDEMPOTENT streaming form:
     an at-least-once replay overwrites exactly its own (bband, batch)
-    slices instead of double-appending.  Refuses the flat layout."""
-    BANDS.check_layout(path, "batched")
+    slices instead of double-appending."""
     bands = (bands_fn or image_bands)(batch_media).localCheckpoint()
     _assert_fresh_bands(
         bspark, bands, path, "image_index_ingest_batch",
@@ -157,8 +156,7 @@ def image_index_ingest_batch(
 
 # layout-only verbs: the index table's lifecycle, verbatim (they never
 # look at band semantics — audio_index/video_index re-export them)
-compact_image_index = BANDS.compact
-compact_streamed_image_index = BANDS.compact_streamed
+compact_image_index = compact_streamed_image_index = BANDS.compact
 image_index_delete = BANDS.delete
 
 

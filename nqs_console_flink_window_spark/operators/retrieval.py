@@ -1573,13 +1573,15 @@ def lm_model_score(docs_df, model: tuple[list[tuple[str, int]], int]):
 TEXT_INDEX_BUCKETS = 64  # token-hash partition count (raw-token partitionBy
 # would mint |vocab| directories; hash buckets keep the layout bounded)
 
-# postings partitioned by token bucket, plus the doc-length sidecar at
-# ``<path>.doclen`` (flat, or batch_id-partitioned when streamed) — both
-# ride the one index-table lifecycle
+# postings partitioned by token bucket, plus two sidecars partitioned by
+# batch alone: doc lengths at ``<path>.doclen`` and one (n_docs, t_tok) row
+# per doclen slice at ``<path>.stats`` — all ride the one index-table
+# lifecycle
 POSTINGS = IT.IndexTable(
     "tbucket", "doc_id", "doc_id bigint, token string, tf bigint, tbucket int"
 )
 DOCLEN = IT.IndexTable(None, "doc_id", "doc_id bigint, dl bigint")
+STATS = IT.IndexTable(None, "n_docs", "n_docs bigint, t_tok bigint")
 
 
 def _token_bucket(token: str) -> int:
@@ -1612,111 +1614,33 @@ def _null_text_error(where: str) -> ValueError:
     )
 
 
-def _rebuild_stats(spark, path: str) -> None:
-    """Rebuild the 1-row stats sidecar FROM the doclen sidecar — the ONE
-    convergence rule every maintenance verb (append, streamed ingest,
-    delete) shares: stats is a pure function of doclen, so a torn write
-    is repaired by any later maintenance call.  The COALESCE keeps t_tok
-    a real 0 when a delete empties the corpus (a NULL would crash
-    _indexed_inputs' int() on the next query).  On the STREAMED layout a
-    delete of every doc removes all batch_id=* partition dirs outright —
-    the doclen dir then holds no parquet files at all and spark.read
-    cannot infer a schema, so an empty dir writes the 0/0 stats row
-    directly — via the index table's emptiness-tolerant read, whose
-    empty frame aggregates to exactly that row (COUNT 0, COALESCE 0), so
-    both layouts take one code path."""
+def _slice_stats():
+    """The (n_docs, t_tok) aggregate columns over doclen rows; COALESCE
+    keeps t_tok a real 0 over no rows."""
     from pyspark.sql import functions as F
 
-    dl = DOCLEN.read(spark, f"{path}.doclen")
-    stats = dl.agg(
+    return (
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("t_tok"),
     )
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}.stats")
 
 
-def _slices_sig(ids: set[int]) -> str:
-    import hashlib
+def _restat(spark, path: str) -> None:
+    """Rewrite every stats slice as the aggregate of its doclen slice —
+    the rule every verb that rewrites doclen slices keeps (append,
+    compaction, delete; streamed ingest and build write their one slice
+    directly).  Slices a delete or a fold emptied vanish from stats with
+    them, and an emptied doclen leaves no stats slice at all."""
+    dl = DOCLEN.read(spark, f"{path}.doclen")
+    STATS.replace(dl.groupBy("batch_id").agg(*_slice_stats()), f"{path}.stats")
 
-    return hashlib.md5(
-        ",".join(str(i) for i in sorted(ids)).encode()
-    ).hexdigest()
 
-
-def _ingest_stats_update(
-    bspark, path: str, batch_id: int, n_b: int, t_b: int
-) -> None:
-    """Per-micro-batch stats maintenance that costs O(batch), not
-    O(corpus): the 1-row sidecar carries a CERTIFICATE column
-    (``slices_sig`` — md5 of the sorted doclen slice-id list it
-    aggregates).  When the currently-landed slice set minus this batch's
-    own slice matches the stored certificate, this batch is a genuinely
-    NEW slice and the new row is the stored row plus this batch's
-    (n_b, t_b) — no read of the corpus-scale doclen sidecar at all (the
-    old per-batch ``_rebuild_stats`` re-read EVERY landed doclen file:
-    O(corpus) per micro-batch, quadratic cumulative over an ingest run).
-
-    Stats stays a pure function of the landed doclen slices named by the
-    certificate: any condition that could break it falls back to the
-    full rebuild —
-    - replay of an already-covered batch (the stored sig includes
-      batch_id, the listing minus batch_id does not — mismatch),
-    - a fresh-checkpoint restart re-owning an existing slice (same
-      mismatch, from the other side),
-    - a torn/absent/legacy stats row (unreadable, or no certificate
-      column — every non-ingest maintenance verb, delete/compact/append
-      rebuilds, writes the plain 2-column row, deliberately invalidating
-      the fast path for one batch),
-    and the full rebuild re-certifies over whatever slice set is landed
-    (including the compaction fold's ``batch_id=-1`` generation — the
-    certificate is a set signature, not a contiguity claim).  The
-    slice-set check is a directory listing (O(#batches) metadata, no
-    data I/O); the stored row is read driver-side via pyarrow (the
-    sidecar is one tiny file — no Spark job)."""
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    ids = DOCLEN.landed_batches(f"{path}.doclen")
-    fast = None
-    if ids is not None and int(batch_id) in ids:
-        prior_sig = _slices_sig(ids - {int(batch_id)})
-        try:
-            import pyarrow.parquet as pq
-
-            parts = [
-                p
-                for p in Path(f"{path}.stats").glob("*.parquet")
-                if not p.name.startswith((".", "_"))
-            ]
-            if len(parts) == 1:
-                tbl = pq.read_table(parts[0])
-                if "slices_sig" in tbl.column_names and tbl.num_rows == 1:
-                    row = tbl.to_pylist()[0]
-                    if row["slices_sig"] == prior_sig:
-                        fast = (
-                            int(row["n_docs"]) + int(n_b),
-                            int(row["t_tok"]) + int(t_b),
-                        )
-        except Exception:  # noqa: BLE001 - any anomaly => full rebuild
-            fast = None
-    if fast is not None:
-        n_docs, t_tok = fast
-    else:
-        srow = DOCLEN.read(bspark, f"{path}.doclen").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("t"),
-        ).collect()[0]
-        n_docs, t_tok = int(srow["n"]), int(srow["t"])
-    sig = _slices_sig(ids) if ids is not None else None
-    # literal SELECT, not createDataFrame: parallelizing a 1-row python
-    # frame costs seconds of scheduler round-trips per call (measured
-    # 4-9 s vs 0.5 s for the identical landed bytes)
-    sig_lit = f"'{sig}'" if sig is not None else "CAST(NULL AS STRING)"
-    bspark.sql(
-        f"SELECT CAST({int(n_docs)} AS BIGINT) AS n_docs, "
-        f"CAST({int(t_tok)} AS BIGINT) AS t_tok, {sig_lit} AS slices_sig"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}.stats")
+def text_index_stats(spark, path: str) -> tuple[int, int]:
+    """The index's corpus statistics (N, T): the sum of its stats slices,
+    (0, 0) for an emptied index.  One row per slice, so the rows come to
+    the driver and sum there (no aggregation stage)."""
+    rows = STATS.read(spark, f"{path}.stats").select("n_docs", "t_tok").collect()
+    return sum(r[0] for r in rows), sum(r[1] for r in rows)
 
 
 def _assert_fresh_doc_ids(
@@ -1772,7 +1696,7 @@ def build_text_index(spark, docs_df, path: str) -> None:
     """Materialize the inverted index: postings (token, doc_id, tf)
     written partitioned by ``tbucket`` = md5_int(token) % 64, plus two
     sidecars — ``<path>.doclen`` (doc_id, dl) and ``<path>.stats``
-    (n_docs, t_tok, 1 row).
+    (n_docs, t_tok) — all landed as the ``batch_id=-1`` generation.
 
     This is the storage shape the online ``bm25_topk`` only approximates:
     once postings are *stored* token-bucketed, a query's term filter is
@@ -1809,7 +1733,7 @@ def build_text_index(spark, docs_df, path: str) -> None:
         .groupBy("doc_id")
         .agg(F.sum("tf").cast("long").alias("dl"))
     )
-    dl.write.mode("overwrite").parquet(f"{path}.doclen")
+    DOCLEN.build(dl, f"{path}.doclen")
     # n_docs counts the DOCS TABLE (the same N the online form's
     # scalar subquery reads) — a distinct-doc count over the token
     # stream would undercount by every zero-token document and shift
@@ -1820,7 +1744,7 @@ def build_text_index(spark, docs_df, path: str) -> None:
     # token), so doclen rows != docs count proves NULL-text docs —
     # whose absent dl rows would drift N on the next append's stats
     # rebuild.  One footer-metadata count, no second corpus scan.
-    dl_back = spark.read.parquet(f"{path}.doclen")
+    dl_back = DOCLEN.read(spark, f"{path}.doclen")
     n_dl = dl_back.count()
     if n_dl != n_docs:
         # Two causes produce n_dl < n_docs: NULL-text docs (no tokens,
@@ -1843,22 +1767,21 @@ def build_text_index(spark, docs_df, path: str) -> None:
             "row — the append-time stats rebuild would drift N); "
             "filter them out and rebuild"
         )
-    stats = dl_back.agg(
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("t_tok")
-    ).select(F.lit(int(n_docs)).cast("long").alias("n_docs"), "t_tok")
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}.stats")
+    # n_dl == n_docs here, so the -1 slice's doclen aggregate is exactly
+    # the docs-table N the online form reads
+    STATS.build(dl_back.agg(*_slice_stats()), f"{path}.stats")
 
 
 def _indexed_inputs(spark, path: str, terms: tuple[str, ...]):
     """Shared front half of every ``*_indexed`` retrieval form: route the
     term set to its buckets (partition pruning at the file-listing level —
     the PartitionFilters pytest pins this), read only those postings, load
-    the doc-length sidecar, and inline the 1-row stats sidecar as N/T
+    the doc-length sidecar, and inline the summed stats slices as N/T
     literal bodies.  Returns (post_df, dl_df, n_body, t_body)."""
     from pyspark.sql import functions as F
 
     buckets = sorted({_token_bucket(t) for t in terms})
-    srow = spark.read.parquet(f"{path}.stats").collect()[0]
+    n_docs, t_tok = text_index_stats(spark, path)
     # emptiness-tolerant reads: a compliance delete of every doc removes
     # all postings/doclen partition dirs — the emptied index must stay
     # queryable (zero results), not raise on schema inference
@@ -1869,8 +1792,8 @@ def _indexed_inputs(spark, path: str, terms: tuple[str, ...]):
         .select("doc_id", "token", "tf")
     )
     dl = DOCLEN.read(spark, f"{path}.doclen")
-    n_body = f"SELECT CAST({int(srow['n_docs'])} AS BIGINT) AS n_docs"
-    t_body = f"SELECT CAST({int(srow['t_tok'])} AS BIGINT) AS t_tok"
+    n_body = f"SELECT CAST({n_docs} AS BIGINT) AS n_docs"
+    t_body = f"SELECT CAST({t_tok} AS BIGINT) AS t_tok"
     return post, dl, n_body, t_body
 
 
@@ -1883,7 +1806,7 @@ def bm25_topk_indexed(
     """BM25 against a persisted inverted index: route the query terms to
     their buckets (partition pruning — check the scan's PartitionFilters),
     read only those postings, join the doc-length sidecar, inline the
-    1-row stats sidecar as literals (no scalar-subquery stages), and run
+    stats sidecar as literals (no scalar-subquery stages), and run
     the SAME scoring fragment as the online form — results are
     bit-identical to ``bm25_topk`` by construction (parity-tested).
 
@@ -1911,7 +1834,7 @@ def bm25_multi_indexed(
     UNION of all queries' terms to their buckets (one pruned postings scan
     serves every query — the per-query loop would re-list the same
     buckets |Q| times), then the same multi scoring fragment as the online
-    form with the 1-row stats sidecar inlined as literals.  Bit-identical
+    form with the stats sidecar inlined as literals.  Bit-identical
     to ``bm25_multi_df`` by construction (parity-tested)."""
     from .staging import staged_views
 
@@ -1943,12 +1866,12 @@ def hybrid_rrf_topk_indexed(
 
     Every QL-leg collection statistic the fusion needs is already in the
     index: tf from the pruned postings, dl from the doclen sidecar, N/T
-    from the 1-row stats sidecar (inlined as literals), and ctf = per-term
+    from the stats sidecar (inlined as literals), and ctf = per-term
     SUM(tf) over the pruned postings — identical to the online form's sum
     over query-term tf rows because postings hold tf for EVERY doc holding
     the term.  Same ``_hybrid_rrf_ctes`` fragment, so results are
     bit-identical to ``hybrid_rrf_df`` by construction (parity-tested on
-    both the batch-built and streamed+compacted layouts)."""
+    both batch-built and streamed+compacted indexes)."""
     from .staging import staged_views
 
     post, dl, n_body, t_body = _indexed_inputs(spark, path, query)
@@ -2004,24 +1927,18 @@ def hybrid_rrf_multi_indexed(
 def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
     """One micro-batch's index landing — the REPLAY-IDEMPOTENT streaming
     form of ``text_index_append``: postings land under
-    ``tbucket=<b>/batch_id=<n>`` and doclen under ``batch_id=<n>`` (the
-    index table's streamed ingest — refuses a flat index), so an
-    at-least-once replay overwrites exactly its own (bucket, batch) slices
-    instead of double-appending.  Term-routed pruning still holds:
-    ``tbucket`` stays the top-level partition.  The stats sidecar is
-    maintained by ``_ingest_stats_update`` after every landing: an O(batch)
-    slice-set-certified increment when this batch is provably a new
-    slice over exactly the set the stored row aggregates, a full doclen
-    rebuild whenever the certificate does not hold (replay, re-owned
-    slices, torn/legacy stats) — either way the landed row equals the
-    doclen aggregate, so a torn overwrite is repaired by any later
-    NON-EMPTY batch (an empty batch returns before landing anything, so
-    it neither tears nor repairs the sidecars)."""
+    ``tbucket=<b>/batch_id=<n>``, doclen and its stats row under
+    ``batch_id=<n>`` (the index table's streamed ingest), so an
+    at-least-once replay overwrites exactly its own slices instead of
+    double-appending.  Term-routed pruning still holds: ``tbucket`` stays
+    the top-level partition.  The stats slice is this batch's doclen
+    aggregate, so stats cost O(batch) and a replay or a fresh-checkpoint
+    restart that re-owns the slice lands the same row (an empty batch
+    returns before landing anything)."""
     from pyspark.sql import functions as F
 
     from .staging import staged_views
 
-    POSTINGS.check_layout(path, "batched")
     # one driver collect enforces NULL-text + intra-batch dup + freshness
     # AND reports emptiness (bounded batches) — three contract probes and
     # the caller's would-be emptiness job folded into a single job
@@ -2048,39 +1965,9 @@ def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
     )
     with staged_views(bspark, p=postings_base) as v:
         POSTINGS.ingest(bspark.sql(_bucketed_postings_sql(v.p)), batch_id, path)
-        # one file per batch landing: the doclen sidecar is read back
-        # every micro-batch (stats rebuild + freshness probe), so its
-        # listing stays at B files total
-        DOCLEN.ingest(bspark.sql(_doclen_sql(v.p)), batch_id, f"{path}.doclen")
-        # THIS batch's stats contribution from the staged postings — one
-        # batch-scale aggregation, so the watermark fast path below never
-        # touches the corpus-scale doclen sidecar
-        brow = bspark.sql(
-            f"SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n, "
-            f"CAST(COALESCE(SUM(tf), 0) AS BIGINT) AS t FROM {v.p}"
-        ).collect()[0]
-    _ingest_stats_update(
-        bspark, path, batch_id, int(brow["n"]), int(brow["t"])
-    )
-
-
-def compact_streamed_text_index(
-    spark, path: str, upto_batch_id: int
-) -> dict[str, int]:
-    """Index maintenance for the STREAMED layout: each token bucket's
-    ``batch_id=<n>`` subpaths below the committed watermark — and the
-    doclen sidecar's — fold into the reserved ``batch_id=-1`` generation
-    (the index table's ``compact_streamed``, inheriting the
-    watermark-coupling contract, the fold-manifest crash safety and the
-    replay-ownership rule).  Term-routed pruning is untouched."""
-    return {
-        **POSTINGS.compact_streamed(spark, path, upto_batch_id),
-        "doclen": sum(
-            DOCLEN.compact_streamed(
-                spark, f"{path}.doclen", upto_batch_id
-            ).values()
-        ),
-    }
+        dl = bspark.sql(_doclen_sql(v.p))
+        DOCLEN.ingest(dl, batch_id, f"{path}.doclen")
+        STATS.ingest(dl.agg(*_slice_stats()), batch_id, f"{path}.stats")
 
 
 # ---------------------------------------------------------------------------
@@ -2203,30 +2090,24 @@ def lm_ppl_terciles_df(spark, table: str = "documents"):
 def text_index_append(spark, path: str, new_docs) -> None:
     """Incremental index maintenance (the ``ivf_index_append`` analogue):
     tokenize ONLY the new docs, append their postings into the same
-    token-hash buckets (appended files join their bucket's partition, so
-    term-routing partition pruning keeps holding without touching old
-    files) and their lengths into the doclen sidecar, then rebuild the
-    1-row stats sidecar FROM the doclen sidecar.
+    token-hash buckets' -1 generation (term-routing partition pruning
+    keeps holding without touching old files) and their lengths into the
+    doclen sidecar, then rewrite the stats slices FROM the doclen sidecar
+    (``_restat``).  Works on a built and on a streamed index alike.
 
-    The stats rebuild makes the append replay-convergent: doclen is
-    append-only and stats is a pure function of it, so a torn or stale
-    stats overwrite is repaired by any later append.  N is rebuilt as the
-    doclen row count, which equals total docs ingested for every doc with
-    non-NULL text (whitespace split always yields >= 1 token, so every
-    such doc lands one dl row) — the same N ``build_text_index`` takes
-    from the docs table; NULL-text docs are outside the contract on both
-    paths (they produce no tokens anywhere, online form included) — and
-    the contract is now ENFORCED by ``_assert_no_null_text`` at build and
-    append time, so N cannot silently drift.
-
-    Layout contract: append belongs to the FLAT (build_text_index)
-    layout; the index table refuses a streamed ``tbucket/batch_id`` index
-    (route through ``text_index_ingest_batch`` instead)."""
+    Stats being a pure function of doclen makes the append
+    replay-convergent: a torn or stale stats write is repaired by any
+    later append, delete or compaction.  N is the doclen row count, which
+    equals total docs ingested for every doc with non-NULL text
+    (whitespace split always yields >= 1 token, so every such doc lands
+    one dl row) — the same N ``build_text_index`` takes from the docs
+    table; NULL-text docs are outside the contract on both paths (they
+    produce no tokens anywhere, online form included) — and the contract
+    is ENFORCED at build and append time, so N cannot silently drift."""
     from pyspark.sql import functions as F
 
     from .staging import staged_views
 
-    POSTINGS.check_layout(path, "flat")
     # one contract collect: NULL-text + dup + freshness (bounded batches)
     _assert_fresh_doc_ids(spark, new_docs, path, "text_index_append")
     view = "__text_index_append_docs"
@@ -2246,7 +2127,7 @@ def text_index_append(spark, path: str, new_docs) -> None:
     with staged_views(spark, p=postings_base) as v:
         POSTINGS.append(spark.sql(_bucketed_postings_sql(v.p)), path)
         DOCLEN.append(spark.sql(_doclen_sql(v.p)), f"{path}.doclen")
-    _rebuild_stats(spark, path)
+    _restat(spark, path)
 
 
 def _bucketed_postings_sql(postings: str) -> str:
@@ -2268,30 +2149,33 @@ def _doclen_sql(postings: str) -> str:
 
 
 def compact_text_index(
-    spark, path: str, target_bytes: int = 128 * 1024 * 1024
+    spark, path: str, upto_batch_id: int = 0
 ) -> dict[str, int]:
-    """Index maintenance for ``text_index_append``'s small files: fold each
-    token bucket's posting files (and the doclen sidecar's) toward
-    ~``target_bytes`` targets.  Pure layout change — postings/doclen rows
-    are preserved exactly, the ``tbucket=N`` directory encoding (and with
-    it term-routed partition pruning) is untouched, and the stats sidecar
-    needs no rebuild (it is a pure function of doclen, whose rows do not
-    change).  Replay-convergent by the same argument as the stats rebuild:
-    a crashed fold is settled by the manifest protocol on the next pass,
-    and a ``text_index_append`` replay that re-appends after a compaction
-    still lands ordinary files the next compaction folds.
+    """Index maintenance: fold each token bucket's -1 generation and its
+    ``batch_id`` landings below ``upto_batch_id`` — and the doclen
+    sidecar's — into the -1 generation (the index table's ``compact``,
+    inheriting the watermark-coupling contract, the fold-manifest crash
+    safety and the replay-ownership rule), then rewrite the stats slices
+    for the folded doclen.  Postings/doclen rows and term-routed pruning
+    are untouched, so every score holds.  The default folds only the
+    small files ``text_index_append`` leaves.
 
     At a 100 TB index this is the Lucene segment-merge analogue: without
-    it, every append adds one ~tiny file per touched bucket and query-time
-    file listing degrades linearly with ingest count.
+    it, every landing adds one ~tiny file per touched bucket and
+    query-time file listing degrades linearly with ingest count.
 
     Returns ``{subdir_name: file_count}`` for every folded directory."""
-    return {
-        **POSTINGS.compact(spark, path, target_bytes),
+    counts = {
+        **POSTINGS.compact(spark, path, upto_batch_id),
         "doclen": sum(
-            DOCLEN.compact(spark, f"{path}.doclen", target_bytes).values()
+            DOCLEN.compact(spark, f"{path}.doclen", upto_batch_id).values()
         ),
     }
+    _restat(spark, path)
+    return counts
+
+
+compact_streamed_text_index = compact_text_index
 
 
 def text_index_delete(spark, path: str, doc_ids) -> None:
@@ -2299,13 +2183,12 @@ def text_index_delete(spark, path: str, doc_ids) -> None:
     lifecycle verb next to build/append/ingest/compact: remove every
     trace of ``doc_ids`` from the inverted index.
 
-    - postings: targeted rewrite of only the (tbucket[, batch_id])
-      partitions holding the docs' tokens (the index table's delete);
-    - doclen sidecar: per-batch rewrite on the streamed layout, full
-      rewrite on the flat one (the sidecar is doc_id -> dl, one row per
-      doc — the bounded-side-table case);
-    - stats sidecar: rebuilt from doclen, the standing convergence rule
-      (a torn run is repaired by any later append/ingest/delete).
+    - postings and doclen: targeted rewrite of only the (tbucket,
+      batch_id) / batch_id slices holding the docs (the index table's
+      delete);
+    - stats: every slice rewritten from doclen (``_restat``), the
+      standing convergence rule (a torn run is repaired by any later
+      append/delete/compaction).
 
     Idempotent and crash-convergent like the core it rides; N/T shrink
     so every post-delete BM25/QL score reflects the smaller corpus —
@@ -2314,4 +2197,4 @@ def text_index_delete(spark, path: str, doc_ids) -> None:
     if POSTINGS.delete(spark, path, doc_ids) is None:
         return
     DOCLEN.delete(spark, f"{path}.doclen", doc_ids)
-    _rebuild_stats(spark, path)
+    _restat(spark, path)

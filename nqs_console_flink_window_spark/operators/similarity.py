@@ -458,10 +458,10 @@ def _read_centroids(spark, path: str) -> np.ndarray:
 
 def ivf_fit_centroids(df: DataFrame, path: str, vec_col: str = "embedding") -> None:
     """Fit-and-persist ONLY the coarse quantizer (bounded deterministic
-    Lloyd on <= IVF_TRAIN_SAMPLE vectors) — the bootstrap a pure streaming
-    build needs: production ANN systems train the quantizer offline on a
-    reference sample, then every ingest path routes into the frozen
-    centroids.  ``build_ivf_index`` = this + one full assignment pass."""
+    Lloyd on <= IVF_TRAIN_SAMPLE vectors) — production ANN systems train
+    the quantizer offline on a reference sample, then every ingest path
+    routes into the frozen centroids.  ``build_ivf_index`` = this + one
+    full assignment pass."""
     centers = _ivf_centers(df, vec_col)
     _write_centroids(df.sparkSession, centers, path)
 
@@ -494,10 +494,9 @@ def ivf_index_append(
     Re-clustering (when drift makes cells lopsided) is build_ivf_index
     again — an offline rebuild, exactly like production ANN systems.
     Small-file debt from repeated appends is settled by
-    ``compact_ivf_index`` (the text index's fold treatment).
-
-    Layout contract: append belongs to the FLAT (build_ivf_index) layout;
-    the index table refuses a streamed ``cell/batch_id`` index."""
+    ``compact_ivf_index`` (the text index's fold treatment).  Appended
+    vectors land in the -1 generation, next to a build's or a
+    compaction's."""
     centers = _read_centroids(spark, path)
     IVF.append(
         new_vecs.withColumn("cell", assign_cells_udf(centers)(F.col(vec_col))),
@@ -515,10 +514,8 @@ def ivf_index_ingest_batch(
     ingest), so an at-least-once replay overwrites exactly its own (cell,
     batch) slices.  nprobe partition pruning still holds: ``cell`` stays
     the top-level partition.  The quantizer must already be persisted —
-    streaming ingest never re-fits, and a pure streaming build bootstraps
-    with ``ivf_fit_centroids`` (quantizer ONLY; a prior
-    ``build_ivf_index`` leaves FLAT data files under ``cell=N/``, which
-    the ingest refuses instead of corrupting the index)."""
+    by ``build_ivf_index`` or ``ivf_fit_centroids`` — and streaming ingest
+    never re-fits."""
     centers = _read_centroids(bspark, path)
     IVF.ingest(
         batch_df.withColumn("cell", assign_cells_udf(centers)(F.col(vec_col))),
@@ -529,13 +526,12 @@ def ivf_index_ingest_batch(
 
 # layout-only verbs — the index table's lifecycle, verbatim (shared by the
 # IVF and IVF-PQ indexes: they rewrite per cell directory and never
-# interpret row columns).  compact_ivf_index folds append small files (the
-# Lucene segment-merge analogue); compact_streamed_ivf_index folds each
-# cell's landings below the committed watermark into batch_id=-1;
+# interpret row columns).  compact_ivf_index (= compact_streamed_ivf_index)
+# folds each cell's -1 generation and its landings below the committed
+# watermark into batch_id=-1 (the Lucene segment-merge analogue);
 # ivf_index_delete is the compliance delete — the centroids sidecar is
 # deliberately untouched (deletion never re-fits, like append).
-compact_ivf_index = IVF.compact
-compact_streamed_ivf_index = IVF.compact_streamed
+compact_ivf_index = compact_streamed_ivf_index = IVF.compact
 ivf_index_delete = IVF.delete
 
 
@@ -1289,9 +1285,9 @@ def ivfpq_topk(
 # IVF-PQ serves exact re-rank).
 #
 # Maintenance verbs are SHARED with the IVF index — the layout is the same
-# cell[/batch_id] partitioned parquet, so compact_streamed_ivf_index /
-# compact_ivf_index / ivf_index_delete operate on the codes index verbatim
-# (they fold/rewrite per cell directory and never interpret row columns).
+# cell/batch_id partitioned parquet, so compact_ivf_index /
+# ivf_index_delete operate on the codes index verbatim (they fold/rewrite
+# per cell directory and never interpret row columns).
 # ---------------------------------------------------------------------------
 
 
@@ -1313,8 +1309,7 @@ def _read_codebooks(spark, path: str) -> np.ndarray:
     """Load the fine quantizer, REFUSING a foreign code format: a
     pre-residual (raw-subvector) index read by residual-aware code would
     silently mis-score every estimate (the q.c_cell term double-counts
-    what raw codes already encode) — the same loud-refusal contract as
-    the flat/batched layout guards."""
+    what raw codes already encode) — refuse loudly instead."""
     df = spark.read.parquet(f"{path}.codebooks")
     if "enc" not in df.columns:
         raise ValueError(
@@ -1342,9 +1337,8 @@ def _read_codebooks(spark, path: str) -> np.ndarray:
 def ivfpq_fit(df: DataFrame, path: str, vec_col: str = "embedding") -> None:
     """Fit-and-persist BOTH quantizers (coarse centroids + RESIDUAL PQ
     codebooks, bounded deterministic Lloyd on <= IVF_TRAIN_SAMPLE
-    vectors) without landing any codes — the bootstrap a pure streaming
-    IVF-PQ build needs (the ``ivf_fit_centroids`` contract extended to
-    the fine quantizer)."""
+    vectors) without landing any codes (the ``ivf_fit_centroids``
+    contract extended to the fine quantizer)."""
     centers = _ivf_centers(df, vec_col)
     _write_centroids(df.sparkSession, centers, path)
     _write_codebooks(df.sparkSession, _ivfpq_books(df, centers, vec_col), path)
@@ -1375,9 +1369,8 @@ def ivfpq_index_ingest_batch(
     persisted codebooks (ingest never re-fits either quantizer), and the
     (vec_id, pq_code) rows land under ``cell=<c>/batch_id=<n>`` with
     dynamic partition overwrite, so an at-least-once replay overwrites
-    exactly its own slices.  Bootstrap a pure streaming index with
-    ``ivfpq_fit``; a flat (build_ivfpq_index) layout refuses ingest for
-    the same mixed-partition-depth reason as the IVF/text indexes."""
+    exactly its own slices.  The quantizers come from
+    ``build_ivfpq_index`` or ``ivfpq_fit``."""
     centers = _read_centroids(bspark, path)
     books = _read_codebooks(bspark, path)
     coded = pq_encode_residual(

@@ -70,7 +70,7 @@ def build_video_index(spark, media: DataFrame, path: str) -> None:
 
 
 def video_index_append(spark, path: str, media: DataFrame) -> None:
-    """Flat-layout incremental maintenance — the image verb reused."""
+    """Incremental maintenance — the image verb reused."""
     image_index_append(spark, path, media, bands_fn=video_bands)
 
 
@@ -85,8 +85,7 @@ def video_index_ingest_batch(
 
 # compaction and compliance deletion operate purely on the parquet layout
 # — the band index table's lifecycle applies verbatim:
-compact_video_index = BANDS.compact
-compact_streamed_video_index = BANDS.compact_streamed
+compact_video_index = compact_streamed_video_index = BANDS.compact
 video_index_delete = BANDS.delete
 read_video_index = read_image_index
 

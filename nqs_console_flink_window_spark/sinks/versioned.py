@@ -26,7 +26,7 @@ Scale notes (100 TB): a manifest lists file paths, not row data — even a
 million-file table is a few hundred MB of JSON read once by the driver;
 per-version data directories keep commits from ever renaming/moving data
 files (rename-free, object-store friendly).  The optimistic version-number
-claim (O_EXCL manifest create, retry on collision) is the same protocol
+claim (exclusive manifest publish, retry on collision) is the same protocol
 Delta uses on its _delta_log.
 """
 
@@ -66,8 +66,9 @@ def commit_version(
     """Write ``df`` as a new table version and return its number.
 
     Data lands under ``data/<uuid>/`` (never touched again); the manifest
-    is the commit point, claimed with an exclusive create so two
-    concurrent writers race on the version number, one loses, and the
+    is the commit point, written whole under a tmp name and published
+    with an exclusive hard link so two concurrent writers race on the
+    version number, one loses, and the
     loser retries against the next number — its data directory is simply
     referenced by a later manifest (append) or orphaned (overwrite wins
     races by definition).  ``mode='append'`` folds the parent's file list
@@ -99,15 +100,21 @@ def commit_version(
             },
             indent=1,
         )
+        # body first, under a tmp name ``latest_version`` never lists,
+        # fsynced; then publish it with an exclusive hard link — a crash
+        # or a racing reader can never see a claimed-but-empty version
+        tmp = _manifest_dir(table_dir) / f".tmp-{uuid.uuid4().hex}"
+        fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         try:
-            fd = os.open(
-                _manifest_path(table_dir, version),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
+            with os.fdopen(fd, "w") as f:
+                f.write(body)
+                f.flush()
+                os.fsync(f.fileno())
+            os.link(tmp, _manifest_path(table_dir, version))
         except FileExistsError:
             continue  # lost the race: recompute against the new parent
-        with os.fdopen(fd, "w") as f:
-            f.write(body)
+        finally:
+            tmp.unlink(missing_ok=True)
         return version
     raise RuntimeError(f"could not claim a version after {max_retries} retries")
 

@@ -123,42 +123,32 @@ def kafka_payload(df: DataFrame) -> DataFrame:
     return df.select(F.to_json(F.struct(*df.columns)).alias("value"))
 
 
-def compact_partition(
-    spark, out_dir: str, date_col: str, part_value: str, target_files: int = 1
-) -> int:
+def compact_partition(spark, out_dir: str, date_col: str, part_value: str) -> int:
     """Small-file compaction for one day partition: streaming appends leave
-    one file per micro-batch; periodic compaction rewrites the partition to
-    ``target_files`` files — the ClickHouse background-merge analogue,
+    one file per micro-batch; periodic compaction folds the partition into
+    one file per ~128 MB — the ClickHouse background-merge analogue,
     scheduled instead of implicit.
 
     Safe next to a live streaming writer: the input file list is snapshotted
-    FIRST and the compaction reads exactly that snapshot (``spark.read.parquet``
-    on the explicit file list), compacted files are moved in alongside, and
-    only the snapshotted inputs are deleted — a file appended concurrently is
-    never read, never deleted, and the partition directory never disappears.
-    Crash window: dying between the move-in and the input-delete leaves
-    duplicates (at-least-once), repaired by the next compaction pass or the
-    A5 dedup-on-read — never data loss.
+    FIRST and the fold reads exactly that snapshot, so a file appended
+    concurrently is never read, never deleted, and the partition directory
+    never disappears.  Crash-safe through the fold core
+    (``fold_parquet_files``): a crash between the move-in and the
+    input delete is rolled forward by the next pass — never duplicates,
+    never data loss.
 
     Returns the number of files after compaction.
     """
     import glob as _glob
-    import uuid as _uuid
 
     part_path = f"{out_dir}/{date_col}={part_value}"
+    # settle a crashed fold BEFORE the snapshot: its roll-forward deletes
+    # inputs the snapshot would otherwise hand back to the fold
+    _repair_crashed_compaction(Path(part_path))
     inputs = sorted(_glob.glob(f"{part_path}/*.parquet"))
     if not inputs:
         return 0
-    df = spark.read.parquet(*inputs)  # snapshot only — concurrent appends unseen
-    tmp_path = f"{part_path}__compact"
-    df.coalesce(target_files).write.mode("overwrite").parquet(tmp_path)
-    stamp = _uuid.uuid4().hex[:8]
-    for i, f in enumerate(sorted(Path(tmp_path).glob("*.parquet"))):
-        f.rename(Path(part_path) / f"compact-{stamp}-{i:05d}.parquet")
-    shutil.rmtree(tmp_path)
-    for f in inputs:
-        Path(f).unlink(missing_ok=True)
-    return len(_glob.glob(f"{part_path}/*.parquet"))
+    return fold_parquet_files(spark, inputs, part_path)
 
 
 COMPACTED_GEN = -1  # reserved batch_id for compacted history
@@ -225,20 +215,23 @@ def _repair_crashed_compaction(gen_path: Path) -> None:
         tmp.unlink(missing_ok=True)
 
 
-def fold_parquet_files(
-    spark, inputs: list[str], dest_dir, target_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """THE fold core shared by ``compact_batch_landings`` and the index
-    table's ``compact`` (``sinks.index_table``): merge ``inputs``
-    (parquet file paths — may include files already living in
-    ``dest_dir``) into
-    ~``target_bytes`` files named ``compact-<stamp>-NNNNN.parquet`` inside
-    ``dest_dir``, crash-safe under the fold-manifest protocol
-    (``_repair_crashed_compaction``'s schema — one writer, one repairer,
-    so the manifest format cannot drift between call sites).  Settles any
-    crashed prior fold first (including pre-commit ``__compact`` staging
-    garbage, which the manifest never covers because it exists only
-    before the commit point).  Skips the rewrite when every input already
+_FOLD_TARGET_BYTES = 128 * 1024 * 1024
+
+
+def fold_parquet_files(spark, inputs: list[str], dest_dir) -> int:
+    """THE fold core shared by ``compact_batch_landings`` (and through it
+    the index table's ``compact``) and ``compact_partition``: merge
+    ``inputs`` (parquet file paths — may include files already living in
+    ``dest_dir``) into ~``_FOLD_TARGET_BYTES`` files named
+    ``compact-<stamp>-NNNNN.parquet`` inside ``dest_dir``, crash-safe
+    under the fold-manifest protocol (``_repair_crashed_compaction``'s
+    schema — one writer, one repairer, so the manifest format cannot
+    drift between call sites).  Settles any
+    crashed prior fold first (including pre-commit ``.<dest>__compact``
+    staging garbage, which the manifest never covers because it exists
+    only before the commit point; the leading dot keeps Spark's FileIndex
+    from reading it as data meanwhile — an underscore name holding ``=``
+    would still be parsed as a partition).  Skips the rewrite when every input already
     lives in ``dest_dir`` at or under the byte target (idempotence).
     Returns the dest dir's parquet file count afterwards."""
     import json as _json
@@ -246,7 +239,7 @@ def fold_parquet_files(
 
     dest = Path(dest_dir)
     _repair_crashed_compaction(dest)
-    tmp_path = f"{dest}__compact"
+    tmp_path = str(dest.parent / f".{dest.name}__compact")
     shutil.rmtree(tmp_path, ignore_errors=True)
     # Manifest paths must be ABSOLUTE: a crash repair may run from a
     # different working directory, and relative inputs would make the
@@ -261,7 +254,7 @@ def fold_parquet_files(
     if not inputs:
         return _count()
     total_bytes = sum(Path(f).stat().st_size for f in inputs)
-    n_files = max(1, math.ceil(total_bytes / target_bytes))
+    n_files = max(1, math.ceil(total_bytes / _FOLD_TARGET_BYTES))
     if n_files >= len(inputs) and all(
         Path(f).parent == dest.resolve() for f in inputs
     ):
@@ -386,50 +379,34 @@ def _delete_part_dir(path: str, partition_cols: list[str], values):
 
 def _commit_delete(path: str, manifest: dict) -> None:
     """Roll the staged delete FORWARD (idempotent — every step checks
-    what already happened).  Partitioned: for each affected partition,
-    remove the old directory and move the staged replacement in (kept
-    partitions) or just remove it (emptied).  Flat: remove exactly the
-    data files the staged snapshot READ (the manifest records their
-    names — a file appended between snapshot and commit survives as
-    duplicate-free extra rows instead of being silently destroyed, the
-    same inputs-only discipline as fold_parquet_files), then move the
-    staged files in under generation-prefixed names (stable across
-    repair re-runs — a crashed move never orphans or double-deletes).
-    Underscore-prefixed staging/manifest names keep Spark's FileIndex
-    blind to the machinery."""
-    import hashlib as _hl
-    import json as _json
+    what already happened): for each affected partition, remove the old
+    directory and move the staged replacement in (kept partitions) or
+    just remove it (emptied).  Underscore-prefixed staging/manifest names
+    keep Spark's FileIndex blind to the machinery."""
     import shutil as _sh
     from pathlib import Path
 
     staging = Path(path) / DELETE_STAGING
-    if manifest.get("flat"):
-        gen = _hl.md5(
-            _json.dumps(manifest, sort_keys=True).encode()
-        ).hexdigest()[:8]
-        prefix = f"delete-{gen}-"
-        flat_staged = staging / "__flat"
-        if flat_staged.exists():
-            inputs = set(manifest["inputs"])
-            for f in sorted(Path(path).glob("*.parquet")):
-                if f.name in inputs:
-                    f.unlink(missing_ok=True)
-            for f in sorted(flat_staged.glob("*.parquet")):
-                f.rename(Path(path) / (prefix + f.name))
-    else:
-        pcols = manifest["partition_cols"]
-        kept = {tuple(t) for t in manifest["kept"]}
-        for t in (tuple(t) for t in manifest["affected"]):
-            real = _delete_part_dir(path, pcols, t)
-            staged = _delete_part_dir(str(staging), pcols, t)
-            if t in kept:
-                if staged.exists():
-                    _sh.rmtree(real, ignore_errors=True)
-                    real.parent.mkdir(parents=True, exist_ok=True)
-                    staged.rename(real)
-                # staged gone -> this partition already committed
-            else:
+    pcols = manifest["partition_cols"]
+    kept = {tuple(t) for t in manifest["kept"]}
+    for t in (tuple(t) for t in manifest["affected"]):
+        real = _delete_part_dir(path, pcols, t)
+        staged = _delete_part_dir(str(staging), pcols, t)
+        if t in kept:
+            if staged.exists():
                 _sh.rmtree(real, ignore_errors=True)
+                real.parent.mkdir(parents=True, exist_ok=True)
+                staged.rename(real)
+            # staged gone -> this partition already committed
+        else:
+            _sh.rmtree(real, ignore_errors=True)
+            # an emptied key dir goes with its last batch slice
+            for parent in real.parents:
+                if parent == Path(path) or not parent.is_dir() or any(
+                    parent.iterdir()
+                ):
+                    break
+                parent.rmdir()
     (Path(path) / DELETE_MANIFEST).unlink(missing_ok=True)
     _sh.rmtree(staging, ignore_errors=True)
 
@@ -496,11 +473,7 @@ def delete_rows_partitioned(
     switches to a semi/anti join (a 10M-literal IN would blow up the
     expression tree and defeat pushdown anyway — the bulk-delete
     shape).  Both forms rewrite only affected partitions.
-    ``partition_cols=[]`` degrades to a staged full rewrite — only for
-    bounded side tables (the flat doclen sidecar), never for
-    corpus-scale data.
     """
-    import os as _os
     from pathlib import Path
 
     from pyspark.sql import functions as F
@@ -538,53 +511,6 @@ def delete_rows_partitioned(
     spark.catalog.refreshByPath(path)
     df = spark.read.parquet(path)
     staging = Path(path) / DELETE_STAGING
-
-    if not partition_cols:
-        # the flat path swaps ROOT data files; on a partitioned dataset
-        # that would leave the old partition dirs in place next to the
-        # new flat files — silent duplication, refuse up front
-        if any(
-            c.is_dir() and "=" in c.name and not c.name.startswith("_")
-            for c in Path(path).iterdir()
-        ):
-            raise ValueError(
-                "flat delete on a partitioned dataset — pass its "
-                "partition_cols"
-            )
-        # a no-op delete must be an actual no-op (the idempotent re-run
-        # case): probe before rewriting the whole side table
-        if _hits(df).limit(1).count() == 0:
-            return (0, 0)
-        keep = _keep(df)
-        # snapshot the exact files this rewrite read BEFORE staging: the
-        # commit unlinks only these, so a file appended mid-delete is
-        # left alone (extra rows, never silent loss)
-        inputs = sorted(_os.path.basename(f) for f in df.inputFiles())
-        keep.write.mode("overwrite").parquet(str(staging / "__flat"))
-        # bulk manifests carry a digest, not the id list itself — a
-        # multi-million-id JSON manifest would make every fsync/commit
-        # step O(ids); the digest keeps the flat path's generation
-        # prefix unique without the payload
-        import hashlib as _hl
-
-        # distinct: the manifest describes the EFFECTIVE delete set, so a
-        # duplicate-carrying request hashes the same as its deduped twin
-        id_strs = sorted({str(i) for i in ids})
-        id_field = (
-            {
-                "ids_md5": _hl.md5("\n".join(id_strs).encode()).hexdigest(),
-                "n_ids": len(id_strs),
-            }
-            if bulk
-            else {"ids": id_strs}
-        )
-        manifest = _write_delete_manifest(
-            path,
-            {"flat": True, "key_col": key_col, "inputs": inputs, **id_field},
-        )
-        _commit_delete(path, manifest)
-        spark.catalog.refreshByPath(path)
-        return (1, 0)
 
     aff = [
         tuple(r)

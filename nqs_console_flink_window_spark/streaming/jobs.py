@@ -33,6 +33,30 @@ from ..sources.batch import load_table
 from ..sources.streams import read_events_stream
 from ..sinks import writers as W
 
+
+def _drain(
+    stream: DataFrame, checkpoint_dir: str, fn, skip_empty: bool = True
+) -> None:
+    """Run ``fn(batch_df, batch_id)`` over every micro-batch ``stream`` has
+    available (``availableNow``) and block until it is drained.  Empty
+    batches skip ``fn`` unless ``skip_empty`` is False.  Session work in
+    ``fn`` goes through ``batch_df.sparkSession``: foreachBatch hands over
+    a DataFrame bound to the micro-batch's CLONED session, and temp views
+    registered on it resolve only there."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        if skip_empty and batch_df.limit(1).count() == 0:
+            return
+        fn(batch_df, batch_id)
+
+    (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
 # ---------------------------------------------------------------------------
 # Topology 1 — task data (the flagship §3.1 lifecycle)
 # ---------------------------------------------------------------------------
@@ -189,13 +213,7 @@ def run_heartbeat_stream(
         finally:
             batch_df.unpersist()
 
-    q = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(events, checkpoint_dir, process, skip_empty=False)
 
 
 # ---------------------------------------------------------------------------
@@ -232,13 +250,7 @@ def run_probe_info_stream(
         finally:
             batch_df.unpersist()
 
-    q = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(events, checkpoint_dir, process, skip_empty=False)
 
 
 # ---------------------------------------------------------------------------
@@ -334,13 +346,7 @@ def run_rollup_stream(events: DataFrame, out_dir: str, checkpoint_dir: str) -> N
     def process(batch_df: DataFrame, batch_id: int) -> None:
         W.idempotent_batch_write(minute_rollup_transform(batch_df), out_dir, batch_id)
 
-    q = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(events, checkpoint_dir, process, skip_empty=False)
 
 
 def hour_rollup_from_minute(spark: SparkSession, rollup_dir: str) -> DataFrame:
@@ -386,8 +392,6 @@ def run_cdc_stream(
     from ..sinks import versioned as V
 
     def apply_batch(batch_df: DataFrame, _bid: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
         wo = W_.partitionBy(key_col).orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
         )
@@ -433,14 +437,7 @@ def run_cdc_stream(
             )
         V.commit_version(merged, table_dir, mode="overwrite")
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, checkpoint_dir, apply_batch)
 
 
 # ---------------------------------------------------------------------------
@@ -598,19 +595,11 @@ def _run_media_dedup_stream(
 ) -> None:
     """Drain ``docs_stream`` through a family's per-batch ``ingest``
     (availableNow; empty batches skip)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        ingest(batch_df.sparkSession, batch_df, batch_id, kept_dir, index_dir)
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        docs_stream,
+        checkpoint_dir,
+        lambda b, bid: ingest(b.sparkSession, b, bid, kept_dir, index_dir),
     )
-    q.awaitTermination()
 
 
 def run_image_dedup_stream(
@@ -673,21 +662,13 @@ def run_incremental_dedup_stream(
     batch against it, land survivors + their bands under idempotent
     batch_id subpaths (an at-least-once replay overwrites its own subpath,
     so the index cannot double-grow)."""
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        # foreachBatch hands over a DataFrame bound to the micro-batch's
-        # CLONED session; temp views registered on it (band_table) resolve
-        # only there, so every op in this body must use that session.
-        ingest_dedup_batch(batch_df.sparkSession, batch_df, batch_id, kept_dir, index_dir)
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        docs_stream,
+        checkpoint_dir,
+        lambda b, bid: ingest_dedup_batch(
+            b.sparkSession, b, bid, kept_dir, index_dir
+        ),
     )
-    q.awaitTermination()
 
 
 # ---------------------------------------------------------------------------
@@ -739,28 +720,21 @@ def run_packing_stream(
     checkpoint_dir: str,
     length: int = 256,
 ) -> None:
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        pack_batch(batch_df.sparkSession, batch_df, batch_id, out_dir, length)
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        docs_stream,
+        checkpoint_dir,
+        lambda b, bid: pack_batch(b.sparkSession, b, bid, out_dir, length),
     )
-    q.awaitTermination()
 
 
 # ---------------------------------------------------------------------------
 # Streaming inverted-index maintenance — documents arrive in micro-batches
 # and land straight into the BM25 index (operators/retrieval.py): postings
 # under (tbucket, batch_id) with dynamic partition overwrite, so replays
-# own their slices; the stats sidecar converges from doclen.  Queries run
+# own their slices, and each batch lands its own stats slice.  Queries run
 # against the live index via bm25_topk_indexed with no rebuild; history
-# folds into batch_id=-1 via compact_streamed_text_index at-or-below the
-# committed watermark (compact_batch_landings' contract, per bucket).
+# folds into batch_id=-1 via compact_text_index at-or-below the committed
+# watermark (compact_batch_landings' contract, per bucket).
 # ---------------------------------------------------------------------------
 
 
@@ -774,20 +748,11 @@ def run_indexing_stream(
     tests; a production job would run a processing-time trigger)."""
     from ..operators.retrieval import text_index_ingest_batch
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        text_index_ingest_batch(
-            batch_df.sparkSession, batch_df, batch_id, index_path
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        docs_stream,
+        checkpoint_dir,
+        lambda b, bid: text_index_ingest_batch(b.sparkSession, b, bid, index_path),
     )
-    q.awaitTermination()
 
 
 def run_ivf_indexing_stream(
@@ -799,29 +764,19 @@ def run_ivf_indexing_stream(
 ) -> None:
     """Streaming runner for incremental IVF vector indexing — the
     ``run_indexing_stream`` twin for the embedding index.  The coarse
-    quantizer must already be persisted via ``ivf_fit_centroids``
-    (quantizer ONLY — a ``build_ivf_index`` bootstrap leaves flat
-    ``cell=N`` data files whose partition depth conflicts with the
-    streamed ``cell/batch_id`` landings; the ingest refuses that layout):
-    streaming ingest only ROUTES into the frozen centroids, never re-fits
-    (availableNow in tests; production would run a processing-time
-    trigger)."""
+    quantizer must already be persisted (``build_ivf_index`` or
+    ``ivf_fit_centroids``): streaming ingest only ROUTES into the frozen
+    centroids, never re-fits (availableNow in tests; production would run
+    a processing-time trigger)."""
     from ..operators.similarity import ivf_index_ingest_batch
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        ivf_index_ingest_batch(
-            batch_df.sparkSession, batch_df, batch_id, index_path, vec_col
-        )
-
-    q = (
-        vec_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        vec_stream,
+        checkpoint_dir,
+        lambda b, bid: ivf_index_ingest_batch(
+            b.sparkSession, b, bid, index_path, vec_col
+        ),
     )
-    q.awaitTermination()
 
 
 # ---------------------------------------------------------------------------
@@ -976,8 +931,6 @@ def run_web_curation_stream(
     (availableNow in tests; production runs a processing-time trigger)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
         curate_index_batch(
             batch_df.sparkSession,
             batch_df,
@@ -991,13 +944,7 @@ def run_web_curation_stream(
             lm_model,
         )
 
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(docs_stream, checkpoint_dir, process)
 
 
 def run_curation_stream(
@@ -1014,9 +961,8 @@ def run_curation_stream(
 ) -> None:
     """Streaming runner for the curation gate (availableNow in tests;
     a production job would run a processing-time trigger)."""
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
         curate_batch(
             batch_df.sparkSession,
             batch_df,
@@ -1030,13 +976,7 @@ def run_curation_stream(
             max_nll_micro_per_tok,
         )
 
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(docs_stream, checkpoint_dir, process)
 
 
 # ---------------------------------------------------------------------------
@@ -1080,18 +1020,11 @@ def run_quantile_stream(
     lo: float = 0.0,
     hi: float = 1000.0,
 ) -> None:
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        hist_batch(batch_df, batch_id, hist_dir, key, val, lo, hi)
-
-    q = (
-        events_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        events_stream,
+        checkpoint_dir,
+        lambda b, bid: hist_batch(b, bid, hist_dir, key, val, lo, hi),
     )
-    q.awaitTermination()
 
 
 def merged_quantiles(
@@ -1150,17 +1083,10 @@ def run_embedding_dedup_stream(
     index_dir: str,
     checkpoint_dir: str,
 ) -> None:
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_embedding_dedup_batch(
-            batch_df.sparkSession, batch_df, batch_id, kept_dir, index_dir
-        )
-
-    q = (
-        vecs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        vecs_stream,
+        checkpoint_dir,
+        lambda b, bid: ingest_embedding_dedup_batch(
+            b.sparkSession, b, bid, kept_dir, index_dir
+        ),
     )
-    q.awaitTermination()

@@ -1668,7 +1668,7 @@ def test_ivf_streamed_ingest_matches_rebuild_replays_and_compacts(
 
 
 def test_ivf_append_compaction_preserves_results(spark, tmp_path) -> None:
-    """compact_ivf_index folds the flat-append path's per-append small
+    """compact_ivf_index folds the append path's per-append small
     files into ~target-size files per cell without changing any result —
     and a second pass is a no-op (fold-core idempotence)."""
     emb = load_table(spark, SMOKE_SF_DIR, "embeddings").select(
@@ -1690,7 +1690,7 @@ def test_ivf_append_compaction_preserves_results(spark, tmp_path) -> None:
 
     for sub, c in counts.items():
         assert c == 1, (sub, c)  # tiny cells fold to one file each
-        files = list((Path(path) / sub).glob("*.parquet"))
+        files = list((Path(path) / sub / "batch_id=-1").glob("*.parquet"))
         assert len(files) == 1 and files[0].name.startswith("compact-")
     assert spark.read.parquet(path).count() == n_before
     assert [
@@ -1698,6 +1698,35 @@ def test_ivf_append_compaction_preserves_results(spark, tmp_path) -> None:
         for r in SIM.ivf_topk_indexed(spark, path, qvec, k=10).collect()
     ] == want
     assert SIM.compact_ivf_index(spark, path) == counts
+
+
+def test_index_read_ignores_crashed_fold_staging(
+    spark, tmp_path, monkeypatch
+) -> None:
+    """A compaction that dies after staging its fold output but before
+    committing the fold manifest leaves the staged files on disk; no
+    reader may see them (every staged row would count twice), and the
+    next compaction clears them."""
+    from nqs_console_flink_window_spark.sinks import writers as W
+
+    emb = load_table(spark, SMOKE_SF_DIR, "embeddings").select(
+        "vec_id", "embedding"
+    )
+    path = str(tmp_path / "ivf_crash")
+    SIM.build_ivf_index(emb.filter("vec_id % 2 = 0"), path)
+    SIM.ivf_index_append(spark, path, emb.filter("vec_id % 2 = 1"))
+    n = spark.read.parquet(path).count()
+
+    def crash(_fd):
+        raise RuntimeError("crash before the fold commit")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(W.os, "fsync", crash)
+        with pytest.raises(RuntimeError, match="fold commit"):
+            SIM.compact_ivf_index(spark, path)
+    assert spark.read.parquet(path).count() == n
+    SIM.compact_ivf_index(spark, path)
+    assert spark.read.parquet(path).count() == n
 
 
 def _png_encode(pixels, channels, filters):
@@ -2731,47 +2760,70 @@ def test_gif_lzw_roundtrip_through_width_growth() -> None:
         assert MM._gif_lzw_decode(mcs, _gif_lzw_encode(mcs, idx)) == idx
 
 
-def test_index_layout_guards(spark, tmp_path) -> None:
-    """The flat (build/append) and streamed (ingest) index layouts put
-    data files at DIFFERENT partition depths (cell=N vs cell=N/batch_id=M;
-    tbucket likewise) — Spark refuses to read a directory mixing both
-    (CONFLICTING_PARTITION_COLUMN_NAMES), so each maintenance path must
-    refuse the other's layout up front instead of corrupting the index."""
+def test_index_landings_mix_build_append_and_ingest(spark, tmp_path) -> None:
+    """One on-disk layout serves every landing: a streamed ingest into a
+    BUILT index and an append into a STREAMED index land side by side
+    (build/append in the batch_id=-1 generation, ingest in batch_id=N),
+    and each index answers exactly like a full rebuild of the same rows —
+    IVF against a rebuild through the same frozen quantizer, text
+    against ``build_text_index`` on the union."""
     from nqs_console_flink_window_spark.operators import retrieval as RT
 
     emb = load_table(spark, SMOKE_SF_DIR, "embeddings")
     old = emb.filter("vec_id < 100")
     new = emb.filter("vec_id >= 100 AND vec_id < 110")
+    qvec = [0.25] * len(emb.select("embedding").first()[0])
 
-    # IVF: streamed ingest refuses a flat (build_ivf_index) layout...
-    flat = str(tmp_path / "ivf_flat")
-    SIM.build_ivf_index(old, flat)
-    with pytest.raises(ValueError, match="partition depths"):
-        SIM.ivf_index_ingest_batch(spark, new, 0, flat)
-    # ...and flat append refuses a streamed layout
+    def ivf_rows(path):
+        return (
+            sorted((r["vec_id"], r["cell"]) for r in spark.read.parquet(path).collect()),
+            [tuple(r) for r in SIM.ivf_topk_indexed(spark, path, qvec, k=10).collect()],
+        )
+
+    ref = str(tmp_path / "ivf_ref")
+    SIM.ivf_fit_centroids(old, ref)
+    SIM.ivf_index_append(spark, ref, old.union(new))
+    want = ivf_rows(ref)
+    # IVF: streamed ingest (and its replay) into a built index...
+    built = str(tmp_path / "ivf_built")
+    SIM.build_ivf_index(old, built)
+    SIM.ivf_index_ingest_batch(spark, new, 0, built)
+    SIM.ivf_index_ingest_batch(spark, new, 0, built)
+    assert ivf_rows(built) == want
+    # ...and append into a streamed one
     streamed = str(tmp_path / "ivf_stream")
     SIM.ivf_fit_centroids(old, streamed)
     SIM.ivf_index_ingest_batch(spark, old, 0, streamed)
-    with pytest.raises(ValueError, match="partition depths"):
-        SIM.ivf_index_append(spark, streamed, new)
-    # the sanctioned pairings still work
-    SIM.ivf_index_append(spark, flat, new)
-    SIM.ivf_index_ingest_batch(spark, new, 1, streamed)
+    SIM.ivf_index_append(spark, streamed, new)
+    assert ivf_rows(streamed) == want
+    SIM.compact_ivf_index(spark, streamed, upto_batch_id=1)
+    assert ivf_rows(streamed) == want
 
-    # text index: same mutual refusal
+    # text index: the same two mixes against a full rebuild
     docs = load_table(spark, SMOKE_SF_DIR, "documents")
     dold = docs.filter("doc_id < 100")
     dnew = docs.filter("doc_id >= 100 AND doc_id < 110")
-    tflat = str(tmp_path / "ti_flat")
-    RT.build_text_index(spark, dold, tflat)
-    with pytest.raises(ValueError, match="partition depths"):
-        RT.text_index_ingest_batch(spark, dnew, 0, tflat)
+    tref = str(tmp_path / "ti_ref")
+    RT.build_text_index(spark, dold.union(dnew), tref)
+
+    def text_rows(path):
+        return (
+            RT.text_index_stats(spark, path),
+            [tuple(r) for r in RT.bm25_multi_indexed(spark, path).collect()],
+        )
+
+    twant = text_rows(tref)
+    assert twant[1]
+    tbuilt = str(tmp_path / "ti_built")
+    RT.build_text_index(spark, dold, tbuilt)
+    RT.text_index_ingest_batch(spark, dnew, 0, tbuilt)
+    assert text_rows(tbuilt) == twant
     tstream = str(tmp_path / "ti_stream")
     RT.text_index_ingest_batch(spark, dold, 0, tstream)
-    with pytest.raises(ValueError, match="partition depths"):
-        RT.text_index_append(spark, tstream, dnew)
-    RT.text_index_append(spark, tflat, dnew)
-    RT.text_index_ingest_batch(spark, dnew, 1, tstream)
+    RT.text_index_append(spark, tstream, dnew)
+    assert text_rows(tstream) == twant
+    RT.compact_text_index(spark, tstream, upto_batch_id=1)
+    assert text_rows(tstream) == twant
 
 
 def test_fresh_doc_id_probe_is_pushed_down(spark, tmp_path) -> None:
@@ -2902,9 +2954,8 @@ def test_ivf_multi_indexed_parity_and_pruning(spark, tmp_path) -> None:
 
 
 def test_ivf_multi_indexed_on_streamed_layout(spark, tmp_path) -> None:
-    """The multi-query indexed search works unchanged on the STREAMED
-    (cell/batch_id) layout: quantizer bootstrapped via ivf_fit_centroids,
-    two ingest landings, results bit-identical to the online ivf_multi
+    """The multi-query indexed search works unchanged on a STREAMED
+    index: quantizer fit via ivf_fit_centroids, two ingest landings, results bit-identical to the online ivf_multi
     over the same corpus (same fit sample -> same centroids -> same
     routing and scoring)."""
     emb = load_table(spark, SMOKE_SF_DIR, "embeddings")
@@ -3025,7 +3076,7 @@ def test_index_compliance_deletion(spark, tmp_path) -> None:
     """Right-to-be-forgotten across both indexes: delete-in-place must be
     INDISTINGUISHABLE from never having indexed the docs/vectors.
 
-    - text index, flat AND streamed layouts: bm25_topk_indexed over the
+    - text index, built AND streamed: bm25_topk_indexed over the
       deleted index == over an index built from the filtered corpus
       (N/T/df all shrink — scores, not just membership, must match);
     - vector index: ivf_topk_indexed over the deleted index == over a
@@ -3045,7 +3096,7 @@ def test_index_compliance_deletion(spark, tmp_path) -> None:
             for r in RT.bm25_topk_indexed(spark, path).collect()
         ]
 
-    # flat layout
+    # built index
     flat = str(tmp_path / "ti_flat")
     RT.build_text_index(spark, docs, flat)
     RT.text_index_delete(spark, flat, gone)
@@ -3055,10 +3106,9 @@ def test_index_compliance_deletion(spark, tmp_path) -> None:
     assert bm25_rows(flat) == want and want
     RT.text_index_delete(spark, flat, gone)  # idempotent
     assert bm25_rows(flat) == want
-    n_docs = spark.read.parquet(f"{flat}.stats").first()["n_docs"]
-    assert n_docs == kept_docs.count()
+    assert RT.text_index_stats(spark, flat)[0] == kept_docs.count()
 
-    # streamed layout: ids spanning both batches
+    # streamed index: ids spanning both batches
     stream = str(tmp_path / "ti_stream")
     RT.text_index_ingest_batch(spark, docs.filter("doc_id % 2 = 0"), 0, stream)
     RT.text_index_ingest_batch(spark, docs.filter("doc_id % 2 = 1"), 1, stream)
@@ -3104,17 +3154,15 @@ def test_delete_crash_recovery(spark, tmp_path) -> None:
     """The staged-commit delete survives a crash at either phase:
     pre-manifest (staging is garbage — dataset untouched, re-run
     completes) and post-manifest (roll-forward — the next call finishes
-    the swap; no kept row is lost, no deleted row survives).  Both the
-    partitioned and the flat path."""
+    the swap; no kept row is lost, no deleted row survives)."""
     import pytest as _pytest
 
     from nqs_console_flink_window_spark.sinks import writers as W
 
-    def build(path, partitioned=True):
-        w = spark.createDataFrame(
+    def build(path):
+        spark.createDataFrame(
             [(k, k % 3) for k in range(30)], "k long, p int"
-        ).write.mode("overwrite")
-        (w.partitionBy("p") if partitioned else w).parquet(path)
+        ).write.mode("overwrite").partitionBy("p").parquet(path)
 
     def keys(path):
         return sorted(r["k"] for r in spark.read.parquet(path).collect())
@@ -3140,25 +3188,24 @@ def test_delete_crash_recovery(spark, tmp_path) -> None:
     assert keys(p1) == [k for k in range(30) if k not in (1, 5, 9)]
 
     # phase 2: manifest written, commit crashes -> next call rolls forward
-    for pcols, tag in ((["p"], "d2"), ([], "d3")):
-        p2 = str(tmp_path / tag)
-        build(p2, partitioned=bool(pcols))
-        real_commit = W._commit_delete
-        state = {"armed": True}
+    p2 = str(tmp_path / "d2")
+    build(p2)
+    real_commit = W._commit_delete
+    state = {"armed": True}
 
-        def crash_commit(path, manifest):
-            if state["armed"]:
-                raise RuntimeError("crash after manifest")
-            return real_commit(path, manifest)
+    def crash_commit(path, manifest):
+        if state["armed"]:
+            raise RuntimeError("crash after manifest")
+        return real_commit(path, manifest)
 
-        with _pytest.MonkeyPatch.context() as mp:
-            mp.setattr(W, "_commit_delete", crash_commit)
-            with _pytest.raises(RuntimeError):
-                W.delete_rows_partitioned(spark, p2, "k", [2, 5], pcols)
-        state["armed"] = False
-        # the NEXT delete call settles the crashed one first, then no-ops
-        assert W.delete_rows_partitioned(spark, p2, "k", [2, 5], pcols) == (0, 0)
-        assert keys(p2) == [k for k in range(30) if k not in (2, 5)]
+    with _pytest.MonkeyPatch.context() as mp:
+        mp.setattr(W, "_commit_delete", crash_commit)
+        with _pytest.raises(RuntimeError):
+            W.delete_rows_partitioned(spark, p2, "k", [2, 5], ["p"])
+    state["armed"] = False
+    # the NEXT delete call settles the crashed one first, then no-ops
+    assert W.delete_rows_partitioned(spark, p2, "k", [2, 5], ["p"]) == (0, 0)
+    assert keys(p2) == [k for k in range(30) if k not in (2, 5)]
 
     # phase 2b: emptying delete crashes post-manifest; roll-forward still
     # removes the whole partition directory
@@ -3184,11 +3231,6 @@ def test_delete_crash_recovery(spark, tmp_path) -> None:
     assert not (Path(p4) / "p=0").exists()
     assert keys(p4) == [k for k in range(30) if k % 3 != 0]
 
-    # misuse guard: the flat path on a partitioned dataset would silently
-    # duplicate rows (old partition dirs + new flat files) — it refuses
-    with _pytest.raises(ValueError, match="partitioned dataset"):
-        W.delete_rows_partitioned(spark, p4, "k", [1], [])
-
 
 def test_bulk_delete_semi_join_parity(spark, tmp_path) -> None:
     """r9-verdict item (writers.py delete_rows_partitioned): above
@@ -3196,64 +3238,47 @@ def test_bulk_delete_semi_join_parity(spark, tmp_path) -> None:
     pushed-down IN-list to semi/anti joins against a distributed id
     frame (a multi-million-literal IN would blow up Catalyst's
     expression tree and defeat pushdown).  Parity at both sizes: same
-    rows removed, same (affected, emptied) accounting, on both layouts;
-    duplicate and string ids included; the bulk flat manifest carries an
-    id digest, never the id payload; and the switch propagates through
+    rows removed, same (affected, emptied) accounting; duplicate and
+    string ids included; and the switch propagates through
     ``text_index_delete`` (which rides this core)."""
     import pytest as _pytest
 
     from nqs_console_flink_window_spark.sinks import writers as W
 
-    def build(path, partitioned=True):
-        w = spark.createDataFrame(
+    def build(path):
+        spark.createDataFrame(
             [(k, k % 3) for k in range(40)], "k long, p int"
-        ).write.mode("overwrite")
-        (w.partitionBy("p") if partitioned else w).parquet(path)
+        ).write.mode("overwrite").partitionBy("p").parquet(path)
 
     def keys(path):
         return sorted(r["k"] for r in spark.read.parquet(path).collect())
 
     ids = [1, 5, 9, 33, 12, 5]  # repeated id: must not double-hit
     expect = [k for k in range(40) if k not in ids]
-    for pcols, tag in ((["p"], "part"), ([], "flat")):
-        inl = str(tmp_path / f"{tag}_in")
-        blk = str(tmp_path / f"{tag}_blk")
-        build(inl, partitioned=bool(pcols))
-        build(blk, partitioned=bool(pcols))
-        r_in = W.delete_rows_partitioned(spark, inl, "k", ids, pcols)
-        captured = {}
-        real_manifest = W._write_delete_manifest
-
-        def capture(path, manifest, _c=captured, _r=real_manifest):
-            _c.update(manifest)
-            return _r(path, manifest)
-
-        with _pytest.MonkeyPatch.context() as mp:
-            mp.setattr(W, "_DELETE_INLIST", 3)  # force the bulk path
-            mp.setattr(W, "_write_delete_manifest", capture)
-            r_blk = W.delete_rows_partitioned(spark, blk, "k", ids, pcols)
-            assert r_in == r_blk
-            assert keys(inl) == keys(blk) == expect
-            if not pcols:
-                assert "ids" not in captured and "ids_md5" in captured
-                assert captured["n_ids"] == len(set(ids))
-            # idempotent re-run stays a no-op on the bulk path too
-            assert W.delete_rows_partitioned(spark, blk, "k", ids, pcols) == (
-                0,
-                0,
-            )
+    inl = str(tmp_path / "part_in")
+    blk = str(tmp_path / "part_blk")
+    build(inl)
+    build(blk)
+    r_in = W.delete_rows_partitioned(spark, inl, "k", ids, ["p"])
+    with _pytest.MonkeyPatch.context() as mp:
+        mp.setattr(W, "_DELETE_INLIST", 3)  # force the bulk path
+        r_blk = W.delete_rows_partitioned(spark, blk, "k", ids, ["p"])
+        assert r_in == r_blk
+        assert keys(inl) == keys(blk) == expect
+        # idempotent re-run stays a no-op on the bulk path too
+        assert W.delete_rows_partitioned(spark, blk, "k", ids, ["p"]) == (0, 0)
 
     # string keys survive the bulk path (r8-advice invariant carried over)
-    sflat = str(tmp_path / "sflat")
+    spart = str(tmp_path / "spart")
     spark.createDataFrame(
-        [(f"doc-{k}", k) for k in range(12)], "k string, v int"
-    ).write.mode("overwrite").parquet(sflat)
+        [(f"doc-{k}", k % 2) for k in range(12)], "k string, v int"
+    ).write.mode("overwrite").partitionBy("v").parquet(spart)
     with _pytest.MonkeyPatch.context() as mp:
         mp.setattr(W, "_DELETE_INLIST", 2)
         W.delete_rows_partitioned(
-            spark, sflat, "k", ["doc-1", "doc-6", "doc-9"], []
+            spark, spart, "k", ["doc-1", "doc-6", "doc-9"], ["v"]
         )
-    assert sorted(r["k"] for r in spark.read.parquet(sflat).collect()) == (
+    assert sorted(r["k"] for r in spark.read.parquet(spart).collect()) == (
         sorted(f"doc-{k}" for k in range(12) if k not in (1, 6, 9))
     )
 
@@ -3274,10 +3299,7 @@ def test_bulk_delete_semi_join_parity(spark, tmp_path) -> None:
     RT.build_text_index(
         spark, docs.filter(~docs.doc_id.isin(gone)), fresh
     )
-    assert (
-        spark.read.parquet(f"{idx}.stats").collect()
-        == spark.read.parquet(f"{fresh}.stats").collect()
-    )
+    assert RT.text_index_stats(spark, idx) == RT.text_index_stats(spark, fresh)
     assert sorted(
         tuple(r) for r in spark.read.parquet(f"{idx}.doclen").collect()
     ) == sorted(
@@ -3288,61 +3310,13 @@ def test_bulk_delete_semi_join_parity(spark, tmp_path) -> None:
     ]
 
 
-def test_flat_delete_spares_late_arriving_file(spark, tmp_path) -> None:
-    """r8-advice regression (writers.py _commit_delete, flat branch): the
-    commit must unlink exactly the files the staged snapshot READ — a
-    file appended between the snapshot and the commit is NOT part of the
-    delete's inputs and must survive (as extra rows, never silent loss).
-    The old prefix rule deleted every non-generation-prefixed root file,
-    destroying the late arrival."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import pytest as _pytest
-
-    from nqs_console_flink_window_spark.sinks import writers as W
-
-    p = str(tmp_path / "flat_late")
-    spark.createDataFrame(
-        [(k, k % 3) for k in range(10)], "k long, p int"
-    ).write.mode("overwrite").parquet(p)
-
-    real_commit = W._commit_delete
-
-    def commit_after_append(path, manifest):
-        # a concurrent writer lands a file in the commit window
-        pq.write_table(
-            pa.table(
-                {
-                    "k": pa.array([100], pa.int64()),
-                    "p": pa.array([9], pa.int32()),
-                }
-            ),
-            f"{path}/late-arrival.parquet",
-        )
-        return real_commit(path, manifest)
-
-    with _pytest.MonkeyPatch.context() as mp:
-        mp.setattr(W, "_commit_delete", commit_after_append)
-        W.delete_rows_partitioned(spark, p, "k", [1, 5], [])
-    got = sorted(r["k"] for r in spark.read.parquet(p).collect())
-    assert got == [k for k in range(10) if k not in (1, 5)] + [100]
-
-
 def test_delete_rows_accepts_string_keys(spark, tmp_path) -> None:
     """r8-advice regression (writers.py delete_rows_partitioned): ids pass
     through untouched — a string key_col (e.g. string doc ids) must work
-    on both the flat and the partitioned path instead of dying in an
-    int() cast."""
+    instead of dying in an int() cast."""
     from nqs_console_flink_window_spark.sinks import writers as W
 
     rows = [(f"doc-{k}", k % 2) for k in range(8)]
-    flat = str(tmp_path / "str_flat")
-    spark.createDataFrame(rows, "k string, p int").write.parquet(flat)
-    W.delete_rows_partitioned(spark, flat, "k", ["doc-1", "doc-6"], [])
-    assert sorted(r["k"] for r in spark.read.parquet(flat).collect()) == [
-        f"doc-{k}" for k in range(8) if k not in (1, 6)
-    ]
-
     part = str(tmp_path / "str_part")
     spark.createDataFrame(rows, "k string, p int").write.partitionBy(
         "p"
@@ -3515,8 +3489,9 @@ def test_ivfpq_persisted_index_lifecycle(spark, tmp_path) -> None:
     (c) replay idempotence of a re-landed batch; (d) compaction on the
     SHARED fold core preserves results; (e) the codes index stores NO
     float vector column; (f) nprobe partition pruning in the plan;
-    (g) flat/batched layout mixing refuses; (h) compliance deletion via
-    the shared ivf_index_delete removes the ids."""
+    (g) a streamed ingest into the built index serves next to the build;
+    (h) compliance deletion via the shared ivf_index_delete removes the
+    ids."""
     from nqs_console_flink_window_spark.sources.batch import load_table
 
     emb = load_table(spark, SMOKE_SF_DIR, "embeddings")
@@ -3534,7 +3509,7 @@ def test_ivfpq_persisted_index_lifecycle(spark, tmp_path) -> None:
 
     # (e) codes-only rows: 8 ints per vector, no embedding column
     codes = spark.read.parquet(idx)
-    assert set(codes.columns) == {"vec_id", "pq_code", "cell"}
+    assert set(codes.columns) == {"vec_id", "pq_code", "cell", "batch_id"}
     assert codes.count() == corpus.count()
 
     # (f) the pruned scan plans PartitionFilters on cell
@@ -3579,9 +3554,15 @@ def test_ivfpq_persisted_index_lifecycle(spark, tmp_path) -> None:
         for r in SIM.ivfpq_topk_indexed(spark, sidx, corpus, qvec, k=10).collect()
     ] == online
 
-    # (g) layout mixing refuses both ways
-    with pytest.raises(ValueError, match="FLAT"):
-        SIM.ivfpq_index_ingest_batch(spark, corpus.limit(1), 9, idx)
+    # (g) the query's own vector, ingested into the built index as batch
+    # 0, becomes the top hit; deleting it restores the built answer
+    SIM.ivfpq_index_ingest_batch(spark, emb.filter(F.col("vec_id") == 0), 0, idx)
+    assert SIM.ivfpq_topk_indexed(spark, idx, emb, qvec, k=1).first()["vec_id"] == 0
+    SIM.ivf_index_delete(spark, idx, [0])
+    assert [
+        tuple(r)
+        for r in SIM.ivfpq_topk_indexed(spark, idx, corpus, qvec, k=10).collect()
+    ] == online
 
     # (h) compliance deletion (shared verb): top hit disappears
     top = online[0][0]

@@ -1,7 +1,8 @@
 """The standing dHash image index (operators/image_index.py, round 10):
 lifecycle verbs, replay idempotence, streamed==batch parity, deletion,
-compaction, layout guards — the third index family held to the same
-contracts the text and IVF/IVF-PQ indexes are fuzz- and pytest-pinned to.
+compaction, mixed build/append/ingest landings — the third index family
+held to the same contracts the text and IVF/IVF-PQ indexes are fuzz- and
+pytest-pinned to.
 """
 
 from __future__ import annotations
@@ -35,7 +36,8 @@ def test_image_index_streamed_matches_build_replays_and_compacts(
     """Three micro-batch ingests hold the SAME rows as one bulk build; a
     replayed batch overwrites its own (bband, batch) slices instead of
     double-appending; streamed compaction folds files below the watermark
-    without changing a row; the two layouts refuse each other."""
+    without changing a row; appends and streamed ingests mix in one
+    layout."""
     idx = str(tmp_path / "imgidx")
     for b in range(3):
         II.image_index_ingest_batch(
@@ -61,28 +63,37 @@ def test_image_index_streamed_matches_build_replays_and_compacts(
         gens = {p.name for p in sub.glob("batch_id=*")}
         assert gens == {"batch_id=-1"}, (sub, gens)
 
-    # layout guards: append into batched / ingest into flat both refuse
-    with pytest.raises(ValueError, match="mix partition depths"):
-        II.image_index_append(spark, idx, _media(spark, "doc_id = 0"))
-    with pytest.raises(ValueError, match="mix partition depths"):
-        II.image_index_ingest_batch(spark, _media(spark, "doc_id = 0"), 9, flat)
-
-    # flat compaction folds append debt down to one file per bucket
-    II.image_index_append(
-        spark,
-        flat,
-        MM.documents_as_images(
+    # one layout: an append into the streamed index and a streamed ingest
+    # into the built one both land beside the existing rows, each matching
+    # a full rebuild over the same images
+    def fresh(*ids):
+        return MM.documents_as_images(
             spark.createDataFrame(
-                [(100001, "fresh appended image text one"),
-                 (100002, "fresh appended image text two")],
+                [(i, f"fresh appended image text {i}") for i in ids],
                 "doc_id long, text string",
             )
-        ),
+        )
+
+    II.image_index_append(spark, idx, fresh(100001, 100002))
+    II.image_index_ingest_batch(spark, fresh(100001, 100002), 9, flat)
+    full = str(tmp_path / "imgidx_full")
+    II.build_image_index(
+        spark, _media(spark, "true").unionByName(fresh(100001, 100002)), full
     )
-    II.compact_image_index(spark, flat)
+    want = _rows(spark, full)
+    spark.catalog.refreshByPath(idx)
+    spark.catalog.refreshByPath(flat)
+    assert _rows(spark, idx) == want
+    assert _rows(spark, flat) == want
+
+    # compaction folds append debt and the landings below the watermark
+    # down to one -1 file per bucket
+    II.image_index_append(spark, flat, fresh(100003, 100004))
+    II.compact_image_index(spark, flat, 10)
     spark.catalog.refreshByPath(flat)
     for sub in Path(flat).glob("bband=*"):
-        assert len(list(sub.glob("*.parquet"))) == 1, sub
+        assert [p.name for p in sub.glob("batch_id=*")] == ["batch_id=-1"], sub
+        assert len(list(sub.rglob("*.parquet"))) == 1, sub
 
 
 def test_image_index_fresh_probe_rejects_null_id_in_oversized_batch(

@@ -53,8 +53,6 @@ def _docs_df(spark, ids):
 
 
 def _stats_is_f_of_doclen(spark, path: str) -> None:
-    srow = spark.read.parquet(f"{path}.stats").collect()
-    assert len(srow) == 1
     import pathlib
 
     if any(pathlib.Path(f"{path}.doclen").rglob("*.parquet")):
@@ -62,7 +60,7 @@ def _stats_is_f_of_doclen(spark, path: str) -> None:
         n, t = dl.count(), (dl.agg(F.sum("dl")).first()[0] or 0)
     else:
         n, t = 0, 0
-    assert (srow[0]["n_docs"], srow[0]["t_tok"]) == (n, t)
+    assert RT.text_index_stats(spark, path) == (n, t)
 
 
 def _no_maintenance_leftovers(path: str) -> None:

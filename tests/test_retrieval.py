@@ -518,7 +518,7 @@ def test_bm25_multi_indexed_matches_online_and_window_is_per_query(
 
 
 def test_text_index_sidecars_are_consistent(spark, tmp_path) -> None:
-    """stats row == aggregates of the postings/doclen sidecars (an index
+    """stats == aggregates of the postings/doclen sidecars (an index
     whose sidecars disagree scores garbage silently)."""
     from nqs_console_flink_window_spark.sources.batch import load_table
 
@@ -527,12 +527,12 @@ def test_text_index_sidecars_are_consistent(spark, tmp_path) -> None:
     RT.build_text_index(spark, docs, idx)
     post = spark.read.parquet(idx)
     dl = spark.read.parquet(f"{idx}.doclen")
-    srow = spark.read.parquet(f"{idx}.stats").collect()[0]
-    assert srow["n_docs"] == dl.count() == post.select("doc_id").distinct().count()
+    n_docs, t_tok = RT.text_index_stats(spark, idx)
+    assert n_docs == dl.count() == post.select("doc_id").distinct().count()
     import pyspark.sql.functions as F
 
-    assert srow["t_tok"] == dl.agg(F.sum("dl")).first()[0]
-    assert srow["t_tok"] == post.agg(F.sum("tf")).first()[0]
+    assert t_tok == dl.agg(F.sum("dl")).first()[0]
+    assert t_tok == post.agg(F.sum("tf")).first()[0]
 
 
 def test_indexing_stream_matches_rebuild_replays_and_compacts(
@@ -732,14 +732,11 @@ def test_text_index_append_matches_full_rebuild(spark, tmp_path) -> None:
         "PartitionFilters", 1
     )[1].splitlines()[0]
 
-    # replay the stats rebuild alone (the tail of a crashed append): same row
-    import pyspark.sql.functions as F
-
-    dl = spark.read.parquet(f"{grown}.doclen")
-    dl.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("t_tok"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{grown}.stats")
+    # replay the stats rewrite alone (the tail of a crashed append): same
+    # stats, same results
+    stats = RT.text_index_stats(spark, grown)
+    RT._restat(spark, grown)
+    assert RT.text_index_stats(spark, grown) == stats
     assert [tuple(r) for r in RT.bm25_topk_indexed(spark, grown).collect()] == online
 
 
@@ -761,21 +758,21 @@ def test_compact_text_index_preserves_state_and_pruning(spark, tmp_path) -> None
 
     def bucket_files():
         return {
-            sub.name: len(list(sub.glob("*.parquet")))
+            sub.name: len(list(sub.rglob("*.parquet")))
             for sub in Path(idx).glob("tbucket=*")
         }
 
     before_files = bucket_files()
     assert max(before_files.values()) > 1  # the small-file problem is real
     want = [tuple(r) for r in RT.bm25_topk_indexed(spark, idx).collect()]
-    stats_before = spark.read.parquet(f"{idx}.stats").collect()
+    stats_before = RT.text_index_stats(spark, idx)
 
     counts = RT.compact_text_index(spark, idx)
     after_files = bucket_files()
     assert all(after_files[b] == 1 for b in after_files), after_files
     assert counts["doclen"] == 1
     assert [tuple(r) for r in RT.bm25_topk_indexed(spark, idx).collect()] == want
-    assert spark.read.parquet(f"{idx}.stats").collect() == stats_before
+    assert RT.text_index_stats(spark, idx) == stats_before
     plan = (
         RT.bm25_topk_indexed(spark, idx)
         ._jdf.queryExecution()
@@ -785,11 +782,11 @@ def test_compact_text_index_preserves_state_and_pruning(spark, tmp_path) -> None
     assert "PartitionFilters" in plan and "tbucket" in plan.split(
         "PartitionFilters", 1
     )[1].splitlines()[0]
-    # a crash-leftover `tbucket=N__compact` staging dir is neither treated
-    # as a bucket (integer-suffix guard) nor left on disk (the fold core
-    # clears pre-commit staging garbage when it next touches the bucket)
+    # a crash-leftover `.batch_id=-1__compact` staging dir is not left on
+    # disk (the fold core clears pre-commit staging garbage when it next
+    # touches the bucket)
     some_bucket = sorted(Path(idx).glob("tbucket=*"))[0]
-    leftover = Path(f"{some_bucket}__compact")
+    leftover = some_bucket / ".batch_id=-1__compact"
     leftover.mkdir()
     (leftover / "junk.parquet").write_bytes(b"not parquet")
     # idempotent: a second pass folds nothing further
@@ -974,52 +971,54 @@ def test_query_terms_with_quotes_are_escaped(spark) -> None:
     } == set(spiky)
 
 
-def test_ingest_stats_slice_certificate(spark, tmp_path) -> None:
-    """The O(batch) stats fast path (r13): the 1-row sidecar carries a
-    slice-set certificate; after every maintenance event — new batch
-    (fast path), replay (certificate mismatch -> full rebuild), delete
-    (legacy 2-col row -> full rebuild next batch) — the landed stats row
-    equals the full doclen aggregate (the lifecycle-fuzz invariant,
-    asserted here at each step)."""
+def test_ingest_stats_per_slice_invariant(spark, tmp_path) -> None:
+    """The per-slice stats rule: after every maintenance event — new
+    batch, replay, delete, compaction, delete-all — each stats slice
+    holds exactly one row, the (n_docs, t_tok) aggregate of its doclen
+    slice, and ``text_index_stats`` is their sum (the lifecycle-fuzz
+    invariant, asserted here at each step)."""
     import pyspark.sql.functions as SF
 
+    def per_slice(df, *aggs):
+        return {tuple(r)[0]: tuple(r)[1:] for r in df.groupBy("batch_id").agg(*aggs).collect()}
+
     def stats_equals_doclen(path):
-        srow = spark.read.parquet(f"{path}.stats").collect()
-        assert len(srow) == 1
-        dl = spark.read.parquet(f"{path}.doclen")
-        n, t = dl.count(), (dl.agg(SF.sum("dl")).first()[0] or 0)
-        assert (srow[0]["n_docs"], srow[0]["t_tok"]) == (n, t)
-        return srow[0]
+        spark.catalog.refreshByPath(f"{path}.doclen")
+        spark.catalog.refreshByPath(f"{path}.stats")
+        stats = RT.STATS.read(spark, f"{path}.stats")
+        dl = RT.DOCLEN.read(spark, f"{path}.doclen")
+        rows = per_slice(stats, SF.count(SF.lit(1)), SF.sum("n_docs"), SF.sum("t_tok"))
+        assert all(c == 1 for c, _, _ in rows.values()), rows
+        want = per_slice(dl, SF.count(SF.lit(1)), SF.sum("dl"))
+        assert {b: (n, t) for b, (_, n, t) in rows.items()} == want
+        return RT.text_index_stats(spark, path)
 
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    idx = str(tmp_path / "cert_idx")
+    idx = str(tmp_path / "slice_idx")
     RT.text_index_ingest_batch(spark, mk([(1, "a b c"), (2, "b d")]), 0, idx)
-    r0 = stats_equals_doclen(idx)
-    assert r0["slices_sig"] is not None  # certified after batch 0
+    assert stats_equals_doclen(idx) == (2, 5)
     RT.text_index_ingest_batch(spark, mk([(3, "c c e")]), 1, idx)
-    r1 = stats_equals_doclen(idx)  # fast-path increment
-    assert (r1["n_docs"], r1["t_tok"]) == (3, 8)
-    # replay of batch 1: certificate mismatch -> full rebuild, same row
+    assert stats_equals_doclen(idx) == (3, 8)
+    # replay of batch 1 re-owns its slice: same stats
     RT.text_index_ingest_batch(spark, mk([(3, "c c e")]), 1, idx)
-    assert tuple(stats_equals_doclen(idx)) == tuple(r1)
-    # delete writes the legacy 2-col row (fast path invalidated)...
+    assert stats_equals_doclen(idx) == (3, 8)
     RT.text_index_delete(spark, idx, [2])
-    srow = spark.read.parquet(f"{idx}.stats").collect()[0]
-    assert "slices_sig" not in srow.asDict()
-    # ...and the next batch re-certifies via the full rebuild
+    assert stats_equals_doclen(idx) == (2, 6)
     RT.text_index_ingest_batch(spark, mk([(4, "f")]), 2, idx)
-    r2 = stats_equals_doclen(idx)
-    assert r2["slices_sig"] is not None
-    assert (r2["n_docs"], r2["t_tok"]) == (3, 7)
+    assert stats_equals_doclen(idx) == (3, 7)
+    # compaction folds batches 0-1 into -1; stats follow the fold
+    RT.compact_text_index(spark, idx, upto_batch_id=2)
+    assert stats_equals_doclen(idx) == (3, 7)
+    RT.text_index_delete(spark, idx, [1, 3, 4])
+    assert stats_equals_doclen(idx) == (0, 0)
 
 
 def test_text_index_delete_all_docs_streamed_converges(spark, tmp_path) -> None:
-    """r8-advice regression (_rebuild_stats): on the STREAMED layout a
-    delete of every doc removes all batch_id=* doclen partition dirs —
-    the doclen dir then holds zero parquet files and spark.read cannot
-    infer a schema.  The rebuild must detect the empty dir and land the
-    converged 0/0 stats row directly instead of raising and leaving
-    stats stale."""
+    """r8-advice regression: on a streamed index a delete of every doc
+    removes all batch_id=* doclen partition dirs — the doclen dir then
+    holds zero parquet files and spark.read cannot infer a schema.  The
+    stats rewrite must tolerate the empty dir and converge to 0/0
+    instead of raising and leaving stats stale."""
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "beta delta")],
         "doc_id long, text string",
@@ -1027,9 +1026,7 @@ def test_text_index_delete_all_docs_streamed_converges(spark, tmp_path) -> None:
     idx = str(tmp_path / "sidx_delete_all")
     RT.text_index_ingest_batch(spark, docs, 0, idx)
     RT.text_index_delete(spark, idx, [1, 2])
-    stats = spark.read.parquet(f"{idx}.stats").collect()
-    assert len(stats) == 1
-    assert stats[0]["n_docs"] == 0 and stats[0]["t_tok"] == 0
+    assert RT.text_index_stats(spark, idx) == (0, 0)
 
 
 def test_hybrid_dense_sparse_leg_parity(spark) -> None:

@@ -204,7 +204,7 @@ def test_compaction_preserves_rows(spark, tmp_path) -> None:
     before_rows = spark.read.parquet(f"{out}/d={day}").count()
     assert before_files >= 5
 
-    after_files = W.compact_partition(spark, out, "d", day, target_files=1)
+    after_files = W.compact_partition(spark, out, "d", day)
     assert after_files == 1
     assert spark.read.parquet(f"{out}/d={day}").count() == before_rows
     # untouched partitions still readable
@@ -246,13 +246,48 @@ def test_compaction_spares_concurrent_append(spark, tmp_path, monkeypatch) -> No
         return files
 
     monkeypatch.setattr(glob_mod, "glob", snapshot_then_land)
-    W.compact_partition(spark, out, "d", day, target_files=1)
+    W.compact_partition(spark, out, "d", day)
     monkeypatch.setattr(glob_mod, "glob", real_glob)
 
     import os
 
     assert os.path.exists(f"{part}/late-concurrent.parquet")
     assert spark.read.parquet(part).count() == full_rows + late_rows
+
+
+def test_compaction_crash_after_move_in_rolls_forward(
+    spark, tmp_path, monkeypatch
+) -> None:
+    """A compaction that dies after moving the compacted file in but
+    before deleting its inputs leaves both on disk; the next pass must
+    finish the interrupted fold (delete the inputs) instead of folding
+    the compacted file AND its inputs together into permanent duplicates."""
+    import pathlib
+
+    import pytest
+
+    ev = load_table(spark, SMOKE_SF_DIR, "events").withColumn("d", F.to_date("ts"))
+    out = str(tmp_path / "facts")
+    for i in range(3):
+        W.write_facts(ev.filter(F.col("event_id") % 3 == i), out, "d")
+    day = "2024-01-03"
+    part = f"{out}/d={day}"
+    want = spark.read.parquet(part).count()
+
+    real_unlink = pathlib.Path.unlink
+
+    def crash_on_input_delete(self, *a, **kw):
+        if self.name.startswith("part-") and self.parent.name == f"d={day}":
+            raise RuntimeError("crash after move-in")
+        return real_unlink(self, *a, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(pathlib.Path, "unlink", crash_on_input_delete)
+        with pytest.raises(RuntimeError, match="crash after move-in"):
+            W.compact_partition(spark, out, "d", day)
+    W.compact_partition(spark, out, "d", day)
+    spark.catalog.refreshByPath(part)
+    assert spark.read.parquet(part).count() == want
 
 
 def test_progress_collector_counts_rows(spark, tmp_path) -> None:

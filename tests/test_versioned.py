@@ -64,7 +64,7 @@ def test_compact_then_vacuum_keeps_live_data(spark, tmp_path) -> None:
 
 
 def test_version_race_retries_to_next_number(spark, tmp_path) -> None:
-    """Losing the O_EXCL manifest race must retry with the next version
+    """Losing the exclusive manifest publish race must retry with the next version
     number and fold the winner's files in (append semantics)."""
     t = str(tmp_path / "tbl")
     V.commit_version(_df(spark, 0, 5), t)
@@ -76,6 +76,39 @@ def test_version_race_retries_to_next_number(spark, tmp_path) -> None:
     v = V.commit_version(_df(spark, 5, 9), t)  # should land as v2
     assert v == 2
     assert V.read_version(spark, t, 2).count() == 9
+
+
+def test_commit_crash_after_version_claim_keeps_table_readable(
+    spark, tmp_path, monkeypatch
+) -> None:
+    """A commit that dies right after it opens its manifest file for the
+    chosen version number must not publish an empty manifest: the table
+    still reads as the previous version, the log still parses, and the
+    next commit lands on top of it."""
+    import os
+
+    import pytest
+
+    t = str(tmp_path / "tbl")
+    V.commit_version(_df(spark, 0, 5), t)
+    real_open = os.open
+
+    def open_then_crash(path, *a, **kw):
+        fd = real_open(path, *a, **kw)
+        if "_manifests" in str(path):
+            os.close(fd)
+            raise RuntimeError("crash after the version was chosen")
+        return fd
+
+    with monkeypatch.context() as mp:
+        mp.setattr(V.os, "open", open_then_crash)
+        with pytest.raises(RuntimeError, match="version was chosen"):
+            V.commit_version(_df(spark, 5, 9), t)
+    assert V.latest_version(t) == 0
+    assert V.read_version(spark, t).count() == 5
+    assert [m["version"] for m in V.versions(t)] == [0]
+    assert V.commit_version(_df(spark, 5, 9), t) == 1
+    assert V.read_version(spark, t).count() == 9
 
 
 def test_empty_commit_reads_back_empty_with_schema(spark, tmp_path) -> None:
